@@ -1056,7 +1056,9 @@ object SparkEntry {
     // array_max over the counts. Bigrams likewise: graft_adjacent_pairs is
     // the identical " "-joined pair list (same kernel the LM family uses),
     // and n_bigrams = max(n_tokens-1, 0) without materializing the pairs.
-    // All outputs integer-identical; oracle re-proved.
+    // All outputs integer-identical; oracle re-proved. Null text: the
+    // kernels return an empty array and greatest() skips the null, so each
+    // kernel column is guarded to stay NULL like the declarative form.
     val withWs = t("documents").select(col("doc_id"),
       TextFunctions.words(col("text")).as("ws"))
     val ws = col("ws")
@@ -1064,15 +1066,15 @@ object SparkEntry {
     withWs
       .select(col("doc_id"),
         size(ws).cast(LongType).as("n_tokens"),
-        GraftExpressions.elemCounts(ws).as("__ec"),
-        greatest(size(ws) - 1, lit(0)).cast(LongType).as("n_bigrams"),
-        size(GraftExpressions.elemCounts(
-          GraftExpressions.adjacentPairs(ws))).cast(LongType)
+        when(ws.isNotNull, GraftExpressions.elemCounts(ws)).as("__ec"),
+        when(ws.isNotNull, greatest(size(ws) - 1, lit(0)).cast(LongType)).as("n_bigrams"),
+        when(ws.isNotNull, size(GraftExpressions.elemCounts(
+          GraftExpressions.adjacentPairs(ws))).cast(LongType))
           .as("n_distinct_bigrams"))
       .select(col("doc_id"), col("n_tokens"),
-        size(ec).cast(LongType).as("n_distinct_tokens"),
-        when(size(ec) === 0, lit(0L))
-          .otherwise(array_max(transform(ec, e => e.getField("c"))))
+        when(ec.isNotNull, size(ec).cast(LongType)).as("n_distinct_tokens"),
+        when(ec.isNotNull, when(size(ec) === 0, lit(0L))
+          .otherwise(array_max(transform(ec, e => e.getField("c")))))
           .as("top_token_freq"),
         col("n_bigrams"), col("n_distinct_bigrams"))
       .orderBy(col("doc_id"))

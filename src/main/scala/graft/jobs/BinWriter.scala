@@ -288,18 +288,31 @@ private[jobs] object BinWriter {
 
   /** Stream one task's `(relPath, dedupKey, line)` rows — sorted by path,
     * within a path by extraction order — into exactly one file per distinct
-    * path. Returns the written relative paths. A failing task deletes its
-    * in-flight temp so retries start clean; already-committed bins are
-    * idempotently re-replaced on retry.
+    * path, every file under the same `header`. Returns the written relative
+    * paths. A failing task deletes its in-flight temp so retries start
+    * clean; already-committed bins are idempotently re-replaced on retry.
     */
   def writePartition(
       it: Iterator[(String, String, String)], outputRoot: String,
       confEntries: Map[String, String], header: Option[String],
       gzip: Boolean, zip: Boolean, dedup: Int = DedupOff,
+      localUid: Int = -1, localGid: Int = -1,
+      sidecar: Option[(String, Array[Byte])] = None,
+      runId: String = ""): Iterator[String] =
+    writeBins(it.map { case (p, k, l) => (p, 0, k, l) }, outputRoot, confEntries, _ => header,
+      gzip, zip, dedup, localUid, localGid, sidecar, runId)
+
+  /** [[writePartition]] over `(relPath, group, dedupKey, line)` rows: a
+    * file's header is `headers(group)` of its first row.
+    */
+  def writeBins(
+      it: Iterator[(String, Int, String, String)], outputRoot: String,
+      confEntries: Map[String, String], headers: Int => Option[String],
+      gzip: Boolean, zip: Boolean, dedup: Int,
       // target.local.{userId,groupId} (reference LocalTargetStorage.kt:
       // 94-101): committed files and created directories get these unix
       // owner attributes when >= 0; local filesystems only
-      localUid: Int = -1, localGid: Int = -1,
+      localUid: Int, localGid: Int,
       // K4 schema sidecar, written executor-side the first time a task
       // touches an output directory: (filename, content). Create-if-absent
       // is idempotent across concurrently-writing tasks (every writer holds
@@ -310,8 +323,8 @@ private[jobs] object BinWriter {
       // (temp names embed it) — a concurrently-running sibling task that
       // opened its temp over an hour ago is never swept; only temps from
       // DEAD runs are.
-      sidecar: Option[(String, Array[Byte])] = None,
-      runId: String = ""): Iterator[String] = {
+      sidecar: Option[(String, Array[Byte])],
+      runId: String): Iterator[String] = {
     if (!it.hasNext) return Iterator.empty
     val conf = new Configuration()
     confEntries.foreach { case (k, v) => conf.set(k, v) }
@@ -352,7 +365,7 @@ private[jobs] object BinWriter {
       out = null
     }
     val mkdirsDone = new java.util.HashSet[String]()
-    def open(rel: String): Unit = {
+    def open(rel: String, header: Option[String]): Unit = {
       target = new HPath(s"$outputRoot/$rel")
       // one mkdirs per distinct parent, not per bin (tasks write many bins
       // per directory; at 50k bins the repeated stat+mkdir chain is real)
@@ -433,8 +446,8 @@ private[jobs] object BinWriter {
     }
 
     try {
-      it.foreach { case (rel, key, line) =>
-        if (rel != current) { close(); current = rel; open(rel) }
+      it.foreach { case (rel, group, key, line) =>
+        if (rel != current) { close(); current = rel; open(rel, headers(group)) }
         dedup match {
           case DedupKeepLast =>
             lastMap.remove(key)

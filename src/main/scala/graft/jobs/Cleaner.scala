@@ -45,8 +45,6 @@ object Cleaner {
     }
     Restructure.sweepStaleUnzipTemps(fs, cfg.outputRoot, cfg.staleTempAgeMs)
     val now = System.currentTimeMillis()
-    val deleted = Seq.newBuilder[String]
-    val rolledBack = Seq.newBuilder[String]
 
     val topics = TopicFiles.listTopicsAll(spark, cfg.inputRoot +: cfg.extraInputRoots)
     val fileLimit = maxFilesPerTopic.getOrElse(Int.MaxValue)
@@ -54,10 +52,12 @@ object Cleaner {
     // warn-and-continue): one unreadable topic must not block deletion
     // across the rest of the store. A failed topic's files stay put and
     // re-verify next iteration.
-    val failedTopics = Seq.newBuilder[(String, String)]
-    for ((topic, files) <- topics.toSeq.sortBy(_._1)) {
+    def cleanTopic(topic: String, files: Seq[org.apache.hadoop.fs.FileStatus]): TopicOutcome = {
       val tCfg = cfg.topicConfig(topic)
-      if (!tCfg.exclude && !tCfg.excludeFromDelete) try {
+      if (tCfg.exclude || tCfg.excludeFromDelete) TopicOutcome(Nil, Nil, None)
+      else try {
+        val deleted = Seq.newBuilder[String]
+        val rolledBack = Seq.newBuilder[String]
         val eligible = files
           .map(st => (st, TopicFiles.parseFilename(st.getPath.getName)))
           .collect { case (st, Some(r)) => (st, r) }
@@ -86,24 +86,37 @@ object Cleaner {
               else Console.err.println(
                 s"[graft] cleaner could not delete verified file ${st.getPath} — will retry next run")
             } else {
+              // OffsetRangeSet synchronizes every access, so topics roll
+              // back concurrently
               ledger.remove(r.topic, r.partition, r.from, r.to.get)
               rolledBack += st.getPath.toString
             }
           }
         }
+        TopicOutcome(deleted.result(), rolledBack.result(), None)
       } catch {
         case scala.util.control.NonFatal(e) =>
           Console.err.println(
             s"[graft] cleaner failed on topic $topic: ${e.getClass.getSimpleName}: ${e.getMessage}")
-          failedTopics += topic -> s"${e.getClass.getSimpleName}: ${e.getMessage}"
+          TopicOutcome(Nil, Nil, Some(topic -> s"${e.getClass.getSimpleName}: ${e.getMessage}"))
       }
+    }
+    // topics verify in parallel (cfg.topicParallelism, as in Restructure.run);
+    // outcomes come back in sorted topic order, so the result is the one a
+    // serial run builds
+    val outcomes = Restructure.perTopic(cfg.topicParallelism, topics.toSeq.sortBy(_._1)) {
+      case (t, f) => cleanTopic(t, f)
     }
     store match {
       case Some(s) => try s.set(cfg.ledger, ledger.toJson) finally s.close()
       case None => Restructure.saveLedger(fs, cfg.ledger, ledger)
     }
-    CleanResult(deleted.result(), rolledBack.result(), failedTopics.result())
+    CleanResult(outcomes.flatMap(_.deleted), outcomes.flatMap(_.rolledBack),
+      outcomes.flatMap(_.failure))
   }
+
+  private final case class TopicOutcome(deleted: Seq[String], rolledBack: Seq[String],
+      failure: Option[(String, String)])
 
   /** Count of not-yet-extracted records per source file name (0 = safe to
     * delete). Records without a time value count as extracted (A4 rule).
@@ -148,7 +161,8 @@ object Cleaner {
     // loading, cleaner/TimestampFileCache.kt:39-68). The probe is
     // DISTRIBUTED, mirroring Restructure.mergeCommitBins: existence +
     // header reads run as one Spark job over the distinct bin paths, and
-    // its result is consumed in chunks of cfg.mergeChunkBins — a
+    // its result is read in one pass or, past cfg.mergeChunkBins targets,
+    // consumed in chunks of cfg.mergeChunkBins — a
     // verification sweep over 10^7 existing bins never holds the full
     // path list on the driver. Missing-record counts are ADDITIVE across
     // chunks because chunks partition the bin space and every record
@@ -188,7 +202,7 @@ object Cleaner {
       val (frames, _) = Restructure.existingBinFrames(spark, outFs, cfg.outputRoot,
         chunk, cfg.format, None, cfg.zip, temps)
       if (frames.isEmpty) None
-      else Some(frames.map { stored =>
+      else Some(frames.map { case (_, stored) =>
         val c =
           if (cfg.format == "json") graft.model.Flatten.leafColumn(name)
           else col(graft.model.Flatten.quote(name))
@@ -209,51 +223,48 @@ object Cleaner {
     }
 
     val counts = scala.collection.mutable.Map.empty[String, Long]
+    def countAgainst(rows: org.apache.spark.sql.DataFrame, chunk: Seq[(String, String)]): Unit = {
+      // per-chunk temp cleanup: the chunk's count is fully drained before
+      // the delete, and holding every chunk's uncompressed zip bytes to the
+      // end would peak at the whole store's size
+      val temps = scala.collection.mutable.ArrayBuffer.empty[HPath]
+      try targetTimesFor(chunk, temps) match {
+        case Some(t) => countMissing(rows.join(t, Seq("__path", "__time"), "left_anti"), counts)
+        case None => countMissing(rows, counts)
+      } finally temps.foreach(t => outFs.delete(t, true))
+    }
     try {
-      val probedDf = probed.toDF("__p", "__header")
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      try {
-        val nExisting = graft.util.Timer.time("cleaner.cache")(probedDf.count())
-        val chunkSize = math.max(1, cfg.mergeChunkBins)
-        if (nExisting == 0L || timeField.isEmpty)
-          countMissing(withTime, counts)
-        else if (nExisting <= chunkSize) {
-          // single pass covering every existing bin
-          val chunk = probedDf.as[(String, String)].collect().toSeq
-          val temps = scala.collection.mutable.ArrayBuffer.empty[HPath]
-          try targetTimesFor(chunk, temps) match {
-            case Some(t) => countMissing(withTime.join(t,
-              Seq("__path", "__time"), "left_anti"), counts)
-            case None => countMissing(withTime, counts)
-          } finally temps.foreach(t => outFs.delete(t, true))
-        } else {
-          // chunk-consumption loop mirrors Restructure.mergeCommitBins
-          // (same repartition→toLocalIterator→grouped discipline; only the
-          // probe arity and the per-chunk action differ) — change both in
-          // lockstep; the scanned-row→path mapping itself is shared
-          // (existingBinFrames)
-          import scala.jdk.CollectionConverters._
+      val chunkSize = math.max(1, cfg.mergeChunkBins)
+      // one pass, as in Restructure.mergeCommitBins: at most chunkSize+1
+      // probe rows tell the no-target, single-chunk and chunked cases apart
+      lazy val head = graft.util.Timer.time("cleaner.cache")(
+        probed.limit(math.min(chunkSize.toLong + 1, Int.MaxValue).toInt).collect().toSeq)
+      if (timeField.isEmpty || head.isEmpty) countMissing(withTime, counts)
+      else if (head.size <= chunkSize) countAgainst(withTime, head)
+      else {
+        // chunk-consumption loop mirrors Restructure.mergeCommitBins
+        // (same repartition→toLocalIterator→grouped discipline; only the
+        // probe arity and the per-chunk action differ) — change both in
+        // lockstep; the scanned-row→path mapping itself is shared
+        // (existingBinFrames)
+        import scala.jdk.CollectionConverters._
+        val probedDf = probed.toDF("__p", "__header")
+          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        try {
+          val nExisting = graft.util.Timer.time("cleaner.cache")(probedDf.count())
           val nParts = math.max(1, math.ceil(nExisting.toDouble / chunkSize).toInt)
           val chunks = probedDf.repartition(nParts, col("__p"))
             .as[(String, String)].toLocalIterator().asScala.grouped(chunkSize)
           for (chunk <- chunks) {
             val chunkPaths = spark.createDataset(chunk.map(_._1)).toDF("__path")
-            val withTimeChunk = withTime.join(broadcast(chunkPaths), Seq("__path"), "left_semi")
-            // per-chunk temp cleanup: the chunk's count is fully drained
-            // before the delete, and holding every chunk's uncompressed
-            // zip bytes to the end would peak at the whole store's size
-            val temps = scala.collection.mutable.ArrayBuffer.empty[HPath]
-            try targetTimesFor(chunk, temps) match {
-              case Some(t) => countMissing(withTimeChunk.join(t,
-                Seq("__path", "__time"), "left_anti"), counts)
-              case None => countMissing(withTimeChunk, counts)
-            } finally temps.foreach(t => outFs.delete(t, true))
+            countAgainst(withTime.join(broadcast(chunkPaths), Seq("__path"), "left_semi"),
+              chunk.toSeq)
           }
           // records whose bin has no existing target at all: all missing
           countMissing(withTime.join(
             probedDf.select(col("__p").as("__path")), Seq("__path"), "left_anti"), counts)
-        }
-      } finally probedDf.unpersist(false)
+        } finally probedDf.unpersist(false)
+      }
     } finally source.unpersist(false)
     files.map(f => new HPath(f).getName).map(n => n -> counts.getOrElse(n, 0L)).toMap
   }

@@ -78,7 +78,9 @@ object CliArgs {
       case "--once" :: t => go(t, acc.copy(asService = Some(false)))
       case ("-i" | "--interval") :: v :: t => go(t, acc.copy(pollInterval = Some(v.toLong)))
       case ("-h" | "--help") :: t => go(t, acc.copy(help = true))
-      case ("--timer") :: t => go(t, acc) // accepted for parity; timing always printed
+      // accepted for reference CLI parity and ignored: no stage timing is
+      // printed (only graft.Bench turns util.Timer on)
+      case ("--timer") :: t => go(t, acc)
       case f :: _ if f.startsWith("-") =>
         throw new IllegalArgumentException(s"unknown flag $f\n$usage")
       case p :: t => go(t, acc.copy(inputPaths = acc.inputPaths :+ p))

@@ -199,41 +199,62 @@ object Restructure {
       }
     }
 
-    val topicSeq = topics.toSeq.sortBy(_._1)
     // per-topic fan-out (reference worker.numThreads): topics are
     // independent pipelines sharing the session's scheduler; the ledger is
     // synchronized internally
-    val results =
-      if (cfg.topicParallelism <= 1) topicSeq.flatMap { case (t, f) => processOne(t, f) }
-      else {
-        import scala.concurrent.{Await, ExecutionContext, Future}
-        import scala.concurrent.duration.Duration
-        val pool = java.util.concurrent.Executors.newFixedThreadPool(cfg.topicParallelism)
-        implicit val ec: ExecutionContext = ExecutionContext.fromExecutor(pool)
-        try Await.result(
-          Future.sequence(topicSeq.map { case (t, f) => Future(processOne(t, f)) }),
-          Duration.Inf).flatten
-        finally pool.shutdown()
-      }
+    val results = perTopic(cfg.topicParallelism, topics.toSeq.sortBy(_._1)) {
+      case (t, f) => processOne(t, f)
+    }.flatten
     flushLedger()
     store.foreach(_.close())
     import scala.jdk.CollectionConverters._
     RunResult(results, ledger, failedTopics.asScala.toSeq)
   }
 
+  /** `f` over `topics` on a pool of `parallelism` threads (inline when
+    * `parallelism <= 1`), results in input order. `f` isolates its own
+    * failures.
+    */
+  private[jobs] def perTopic[A, B](parallelism: Int, topics: Seq[A])(f: A => B): Seq[B] =
+    if (parallelism <= 1) topics.map(f)
+    else {
+      import scala.concurrent.{Await, ExecutionContext, Future}
+      import scala.concurrent.duration.Duration
+      val pool = java.util.concurrent.Executors.newFixedThreadPool(parallelism)
+      implicit val ec: ExecutionContext = ExecutionContext.fromExecutor(pool)
+      try Await.result(Future.sequence(topics.map(t => Future(f(t)))), Duration.Inf)
+      finally pool.shutdown()
+    }
+
   private def processTopic(
       spark: SparkSession, cfg: RestructureJobConfig, fs: FileSystem,
       topic: String, files: Seq[String], ledger: OffsetRangeSet,
       skip: Map[String, Seq[(Long, Long)]] = Map.empty): TopicResult = {
     val avroSchema = Timer.time("read")(AvroRead.topicReaderSchema(spark, files))
-    // persist the decoded batch: the job reads it 3× (target-path listing,
-    // open-ended offset counts, the bin write itself) and Avro decode is the
-    // expensive step; the batch is bounded by maxFilesPerTopic
-    val df = AvroRead.read(spark, files, Some(avroSchema), skip)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val decoded = AvroRead.read(spark, files, Some(avroSchema), skip)
+    // persist the decoded batch: a static topic's write reads it twice (the
+    // target-bin probe, the bin write itself) and Avro decode is the
+    // expensive step; the batch is bounded by maxFilesPerTopic. A dynamic
+    // CSV topic persists its fingerprinted frame instead (every later read
+    // is served from that cache), so caching the batch too would only
+    // double its memory.
+    val df =
+      if (cfg.format != "json" && hasDynamicLeaves(dataSchemaOf(decoded))) decoded
+      else decoded.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try processTopicImpl(spark, cfg, fs, topic, files, ledger, avroSchema, df, skip)
     finally df.unpersist(false)
   }
+
+  private def dataSchemaOf(df: DataFrame): StructType =
+    StructType(df.schema.fields.filterNot(f =>
+      f.name == AvroRead.FileCol || f.name == AvroRead.PosCol))
+
+  /** Map keys and array indices become CSV columns per record (§7.4-1). */
+  private def hasDynamicLeaves(dataSchema: StructType): Boolean =
+    Flatten.leafPaths(dataSchema).exists {
+      case (_, _: MapType) | (_, _: ArrayType) => true
+      case _ => false
+    }
 
   private def processTopicImpl(
       spark: SparkSession, cfg: RestructureJobConfig, fs: FileSystem,
@@ -241,8 +262,7 @@ object Restructure {
       avroSchema: org.apache.avro.Schema, df: DataFrame,
       skip: Map[String, Seq[(Long, Long)]]): TopicResult = {
     val tCfg = cfg.topicConfig(topic)
-    val dataSchema = StructType(df.schema.fields.filterNot(f =>
-      f.name == AvroRead.FileCol || f.name == AvroRead.PosCol))
+    val dataSchema = dataSchemaOf(df)
 
     val timeCol = TimeExtract.timeColumn(dataSchema)
     val template = tCfg.pathTemplate.getOrElse(cfg.pathTemplate)
@@ -260,27 +280,23 @@ object Restructure {
           PathTemplate.compile(bt, params, Some(timeCol), Some(dataSchema), cfg.pathPlugins)),
         lit("/"), basePath))
 
-    val hasDynamic = Flatten.leafPaths(dataSchema).exists {
-      case (_, _: MapType) | (_, _: ArrayType) => true
-      case _ => false
-    }
     // K4 schema sidecar rides the write tasks (BinWriter first-touch per
     // output directory, create-if-absent), along with the stale dot-temp
     // sweep — no driver-side pass over a collected bin-directory list
     val sidecarBytes = Some(avroSchema.toString(true).getBytes("UTF-8"))
     val written = Timer.time("close.store") {
       if (cfg.format == "json")
-        writeJsonBins(spark, cfg, fs, topic, dfE, dataSchema, pathCol, tCfg, sidecarBytes)
-      else if (hasDynamic)
+        jsonBins(spark, cfg, fs, topic, dfE, dataSchema, pathCol, sidecarBytes)
+      else if (hasDynamicLeaves(dataSchema))
         writeCsvBinsDynamic(spark, cfg, fs, topic, dfE, dataSchema, timeCol, template, tCfg,
           sidecarBytes)
-      else writeCsvBins(spark, cfg, fs, topic, dfE, dataSchema, pathCol, tCfg, sidecarBytes)
+      else csvBins(spark, cfg, fs, topic, dfE, dataSchema, pathCol, sidecarBytes)
     }
 
-    // ledger commit: closed ranges are sized by their offset span; only
-    // open-ended files (no end offset in the name) need a counting scan.
-    // S9: an endOffset object tag closes an open range FIRST — tagged files
-    // commit the tag's end offset with zero extra Spark jobs
+    // ledger commit: closed ranges are sized by their offset span; an
+    // open-ended file (no end offset in the name) is sized by the rows the
+    // commit tasks took from it — counted as they write, so no extra scan.
+    // S9: an endOffset object tag closes an open range FIRST
     val tagSource = cfg.tagOffsetSource(fs.getConf)
     val parsed = files
       .flatMap { f =>
@@ -293,18 +309,7 @@ object Restructure {
           n -> closed
         }
       }
-    val openEnded = parsed.collect { case (n, r) if r.to.isEmpty => n }
-    val counts: Map[String, Long] =
-      if (openEnded.isEmpty) Map.empty
-      else {
-        // chunked fetch: the per-file count rows stream partition-by-
-        // partition (tiny post-shuffle agg), never one big collect buffer
-        val it = df.filter(col(AvroRead.FileCol).isin(openEnded: _*))
-          .groupBy(col(AvroRead.FileCol)).count().toLocalIterator()
-        val b = Map.newBuilder[String, Long]
-        while (it.hasNext) { val r = it.next(); b += r.getString(0) -> r.getLong(1) }
-        b.result()
-      }
+    val counts = written.fileRows
     val processedAt = Instant.now()
     // skipped positions still count toward a file's total record count (the
     // open-ended end offset), but not toward records extracted this run
@@ -321,7 +326,7 @@ object Restructure {
       val sk = skippedPerFile.getOrElse(name, 0L)
       r.to.map(t => t - r.from + 1 - sk).getOrElse(counts.getOrElse(name, 1L - math.min(sk, 1L)))
     }.sum
-    TopicResult(topic, files, records, written)
+    TopicResult(topic, files, records, written.bins)
   }
 
   /** Flattened CSV output projection: dot-named leaves in schema order,
@@ -345,11 +350,99 @@ object Restructure {
   private[graft] def writeCsvBins(
       spark: SparkSession, cfg: RestructureJobConfig, fs: FileSystem, topic: String,
       df: DataFrame, dataSchema: StructType, pathCol: Column, tCfg: TopicJobConfig,
-      sidecar: Option[Array[Byte]] = None): WrittenBins = {
+      sidecar: Option[Array[Byte]] = None): WrittenBins =
+    csvBins(spark, cfg, fs, topic, df, dataSchema, pathCol, sidecar).bins
+
+  private def csvBins(
+      spark: SparkSession, cfg: RestructureJobConfig, fs: FileSystem, topic: String,
+      df: DataFrame, dataSchema: StructType, pathCol: Column,
+      sidecar: Option[Array[Byte]]): Committed = {
     val outCols = csvColumns(dataSchema, cfg.allExcludeFields(topic))
     val prepared = df.select(outCols ++ Seq(
       pathCol.as("__path"), col(AvroRead.FileCol), col(AvroRead.PosCol)): _*)
-    mergeCommitBins(spark, cfg, fs, prepared, "csv", None, topic, sidecar)
+    mergeCommitBins(spark, cfg, fs, prepared, "csv", None, topic, sidecar,
+      new ByNameLayout(cfg, topic, "csv"))
+  }
+
+  /** One commit's report: its bins, and the rows it took from each source
+    * file (FileCol → rows, counted before dedup; rows re-read from existing
+    * bins carry no source file and are not counted). Open-ended source
+    * files are sized by it in the ledger.
+    */
+  private[jobs] final case class Committed(bins: WrittenBins, fileRows: Map[String, Long]) {
+    def merge(o: Committed, cap: Int): Committed =
+      Committed(bins.merge(o.bins, cap), addCounts(fileRows, o.fileRows))
+  }
+  private[jobs] object Committed { val empty: Committed = Committed(WrittenBins.empty, Map.empty) }
+
+  private def addCounts(a: Map[String, Long], b: IterableOnce[(String, Long)]): Map[String, Long] =
+    b.iterator.foldLeft(a) { case (m, (k, n)) => m.updated(k, m.getOrElse(k, 0L) + n) }
+
+  /** What [[commitBins]] writes: `rows` carry `__path`, FileCol and PosCol
+    * plus whatever `group`, `key` and `line` read. Within a bin, rows sort
+    * by (group, file, position); a bin's header is `headers(group)` of its
+    * first row (a header of None: headerless JSON bins). A `group` of None
+    * is group 0 for every row.
+    */
+  private[jobs] final case class CommitInput(rows: DataFrame, group: Option[Column], key: Column,
+      line: Column, headers: IndexedSeq[Option[String]])
+
+  /** How a commit's rows become bin lines. */
+  private[jobs] trait BinLayout {
+    /** A merge chunk's new rows joined by the rows of its existing bins,
+      * given as (header line, frame) pairs by [[existingBinFrames]].
+      */
+    def attach(fresh: DataFrame, existing: Seq[(String, DataFrame)]): DataFrame
+    def render(merged: DataFrame): CommitInput
+  }
+
+  /** Static CSV and JSON bins: rows carry data columns, existing bins join
+    * by column name, and a commit renders every bin with the union of its
+    * columns.
+    */
+  private final class ByNameLayout(cfg: RestructureJobConfig, topic: String, format: String)
+      extends BinLayout {
+    def attach(fresh: DataFrame, existing: Seq[(String, DataFrame)]): DataFrame =
+      attachByName(fresh, existing)
+    def render(merged: DataFrame): CommitInput = {
+      val names = merged.columns.toSeq
+        .filterNot(Seq("__path", AvroRead.FileCol, AvroRead.PosCol).contains)
+      val (key, line) = keyAndLine(cfg, topic, format, names, names.map(n => col(s"`$n`")))
+      CommitInput(merged, None, key, line,
+        Vector(if (format == "json") None else Some(names.map(csvQuote).mkString(","))))
+    }
+  }
+
+  /** Dynamic-shape CSV bins: rows arrive rendered per shape group
+    * (`__grp`, `__key`, `__line`; `names(g)` are group g's columns). An
+    * existing bin holds its group's header — that is how its attempt slot
+    * was chosen — so its rows are rendered into the group's layout by
+    * column position.
+    */
+  private final class ShapeGroupLayout(cfg: RestructureJobConfig, topic: String,
+      names: IndexedSeq[Seq[String]]) extends BinLayout {
+    private val headers = names.map(_.map(csvQuote).mkString(","))
+    // equal headers render identically: the lowest ordinal stands for all
+    private val groupOfHeader = headers.zipWithIndex.reverse.toMap
+    def attach(fresh: DataFrame, existing: Seq[(String, DataFrame)]): DataFrame =
+      existing.foldLeft(fresh) { case (acc, (header, stored)) =>
+        val g = groupOfHeader.getOrElse(header, throw new IllegalStateException(
+          s"an existing bin of topic $topic changed its header during the run; " +
+            "its attempt slot no longer matches any shape group of this batch"))
+        val n = stored.columns.length - 1 // the bin reader appends `__path`
+        require(n == names(g).length,
+          s"existing bin header parses to $n columns, its shape group has ${names(g).length}")
+        val cols = (0 until n).map(i => s"__c$i")
+        val (key, line) = keyAndLine(cfg, topic, "csv", names(g), cols.map(col))
+        val old = stored.toDF(cols :+ "__path": _*).select(col("__path"),
+          lit(g).as("__grp"),
+          lit("").as(AvroRead.FileCol), // sorts before any real file
+          monotonically_increasing_id().as(AvroRead.PosCol),
+          key.as("__key"), line.as("__line"))
+        acc.unionByName(old)
+      }
+    def render(merged: DataFrame): CommitInput =
+      CommitInput(merged, Some(col("__grp")), col("__key"), col("__line"), headers.map(Some(_)))
   }
 
   /** K2 append-to-existing: union the current contents of every bin this
@@ -361,13 +454,16 @@ object Restructure {
     * Merge PLANNING is distributed AND its consumption CHUNKED: existence +
     * readability + header probing runs as one Spark job over the distinct
     * bin paths (one FS metadata call per bin rides the executors, not a
-    * driver thread pool), and the probe result is consumed on the driver in
-    * chunks of at most `cfg.mergeChunkBins` paths — each chunk's
+    * driver thread pool), and one pass fetches at most
+    * `cfg.mergeChunkBins + 1` probe rows — enough to tell the three cases
+    * apart without a separate count. No row: a cold commit. At most
+    * `mergeChunkBins`: the common append, one commit over every existing
+    * bin. More: a giant re-run, whose probe result is persisted and
+    * consumed in chunks of `mergeChunkBins` paths — each chunk's
     * header-group readers are planned and COMMITTED before the next chunk
     * is fetched, so a re-run touching 10^7 pre-existing bins never holds
     * more than one chunk of path strings (plus one probe shuffle
-    * partition) on the driver. A cold run short-circuits on the probe
-    * count and fetches nothing. Per-chunk commits are safe because chunks
+    * partition) on the driver. Per-chunk commits are safe because chunks
     * PARTITION the bin space: every bin's rows (existing + new) land
     * wholly in exactly one commit, the writer's dedup is per bin, and the
     * ledger marks source files only after the whole topic batch succeeds —
@@ -376,25 +472,28 @@ object Restructure {
     *
     * `jsonSchema` is Some(nested schema) for JSON bins (read typed, no
     * inference); None for CSV bins (read as strings by each file's header).
+    * `layout` turns new and existing rows into bin lines. `probedBins`, when
+    * given, is the [[probeBin]] result for every existing target the rows
+    * touch, taken by the caller; the probe job is then skipped.
     *
-    * Column-union nuance: a commit renders every bin with the UNION of its
-    * frame's columns (new schema + all merged headers in that commit).
-    * Headers are uniform in the static path (one schema per topic batch;
-    * the dynamic path isolates differing headers into attempt files
-    * upstream), so chunked and single commits agree. If existing bins
+    * Column-union nuance ([[ByNameLayout]]): a commit renders every bin with
+    * the UNION of its frame's columns (new schema + all merged headers in
+    * that commit). Headers are uniform in the static path (one schema per
+    * topic batch), so chunked and single commits agree. If existing bins
     * carry DRIFTED extra columns, a chunked run unions per chunk rather
     * than across the whole batch — each bin still keeps its own columns
-    * plus the batch schema, which is the semantically meaningful set.
+    * plus the batch schema, which is the semantically meaningful set. The
+    * dynamic path renders each shape group with its own columns
+    * ([[ShapeGroupLayout]]), so its bins never union.
     */
   private[jobs] def mergeCommitBins(
       spark: SparkSession, cfg: RestructureJobConfig, fs: FileSystem,
       prepared: DataFrame, format: String, jsonSchema: Option[StructType],
-      topic: String, sidecar: Option[Array[Byte]]): WrittenBins = {
+      topic: String, sidecar: Option[Array[Byte]], layout: BinLayout,
+      probedBins: Option[Seq[(String, Int, String)]] = None): Committed = {
     import spark.implicits._
     val confEntries = AvroRead.fsConfEntries(spark)
     val outputRoot = cfg.outputRoot
-    // probe state: 0 = exists (zip mode: no header needed), 1 = readable
-    // with header, 2 = exists but unreadable/corrupt
     val wantHeader = !cfg.zip
     val fmt = format
     val probed = prepared.select(col("__path")).distinct().as[String].mapPartitions { it =>
@@ -403,71 +502,77 @@ object Restructure {
         val conf = new org.apache.hadoop.conf.Configuration()
         confEntries.foreach { case (k, v) => conf.set(k, v) }
         val pfs = new HPath(outputRoot).getFileSystem(conf)
-        it.flatMap { p =>
-          val full = new HPath(s"$outputRoot/$p")
-          if (!pfs.exists(full)) None
-          else if (!wantHeader) Some((p, 0, ""))
-          else if (!sniffReadable(pfs, full.toString)) Some((p, 2, ""))
-          else if (fmt == "json") Some((p, 1, ""))
-          else readHeaderLine(pfs, full) match {
-            case Some(h) => Some((p, 1, h))
-            case None => Some((p, 2, ""))
-          }
-        }
+        it.flatMap(p => probeBin(pfs, outputRoot, p, wantHeader, fmt))
       }
     }
-    val probedDf = probed.toDF("__p", "__state", "__header")
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      val nExisting = Timer.time("write.open")(probedDf.count())
-      val chunkSize = math.max(1, cfg.mergeChunkBins)
-      if (nExisting == 0L)
-        commitBins(spark, cfg, fs, prepared, format, topic, sidecar)
-      else if (nExisting <= chunkSize) {
-        // common append case: one chunk covering every existing bin —
-        // the exact single-commit plan shape of a non-chunked merge
-        val chunk = probedDf.as[(String, Int, String)].collect().toSeq
-        val temps = scala.collection.mutable.ArrayBuffer.empty[HPath]
-        try commitBins(spark, cfg, fs,
-          mergeChunk(spark, cfg, fs, prepared, chunk, fmt, jsonSchema, temps),
-          format, topic, sidecar)
-        finally temps.foreach(t => fs.delete(t, true))
-      } else {
-        // giant re-run: fetch ≤chunkSize probe rows at a time (cached
-        // partitions sized ~chunkSize, so toLocalIterator holds one);
-        // each chunk re-scans the persisted batch for its bins' rows —
-        // N-chunk re-runs trade N cached scans for O(chunk) driver heap.
-        // Cleaner.verifyTopic mirrors this loop — change both in lockstep.
-        import scala.jdk.CollectionConverters._
+    val chunkSize = math.max(1, cfg.mergeChunkBins)
+    def commitChunk(rows: DataFrame, chunk: Seq[(String, Int, String)]): Committed = {
+      val temps = scala.collection.mutable.ArrayBuffer.empty[HPath]
+      try commitBins(spark, cfg, layout.render(
+          mergeChunk(spark, cfg, fs, rows, chunk, fmt, jsonSchema, temps, layout.attach)),
+        format, topic, sidecar)
+      finally temps.foreach(t => fs.delete(t, true))
+    }
+    val head = probedBins.getOrElse(Timer.time("write.open")(
+      probed.limit(math.min(chunkSize.toLong + 1, Int.MaxValue).toInt).collect().toSeq))
+    if (head.isEmpty) commitBins(spark, cfg, layout.render(prepared), format, topic, sidecar)
+    else if (head.size <= chunkSize) commitChunk(prepared, head)
+    else {
+      // giant re-run: fetch ≤chunkSize probe rows at a time (cached
+      // partitions sized ~chunkSize, so toLocalIterator holds one);
+      // each chunk re-scans the persisted batch for its bins' rows —
+      // N-chunk re-runs trade N cached scans for O(chunk) driver heap.
+      // Cleaner.verifyTopic mirrors this loop — change both in lockstep.
+      import scala.jdk.CollectionConverters._
+      val probedDf = probedBins.fold(probed.toDF())(spark.createDataset(_).toDF())
+        .toDF("__p", "__state", "__header")
+        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      try {
+        val nExisting = Timer.time("write.open")(probedDf.count())
         val nParts = math.max(1, math.ceil(nExisting.toDouble / chunkSize).toInt)
-        var written = WrittenBins.empty
+        var written = Committed.empty
         val chunks = probedDf.repartition(nParts, col("__p"))
           .as[(String, Int, String)].toLocalIterator().asScala.grouped(chunkSize)
         for (chunk <- chunks) {
           val chunkPaths = spark.createDataset(chunk.map(_._1)).toDF("__path")
-          val preparedChunk =
-            prepared.join(broadcast(chunkPaths), Seq("__path"), "left_semi")
-          val temps = scala.collection.mutable.ArrayBuffer.empty[HPath]
-          try written = written.merge(commitBins(spark, cfg, fs,
-            mergeChunk(spark, cfg, fs, preparedChunk, chunk, fmt, jsonSchema, temps),
-            format, topic, sidecar), cfg.maxReportedPaths)
-          finally temps.foreach(t => fs.delete(t, true))
+          written = written.merge(commitChunk(
+            prepared.join(broadcast(chunkPaths), Seq("__path"), "left_semi"), chunk.toSeq),
+            cfg.maxReportedPaths)
         }
         // bins with no existing target: one final new-only commit
         val newOnly = prepared.join(
           probedDf.select(col("__p").as("__path")), Seq("__path"), "left_anti")
         written.merge(
-          commitBins(spark, cfg, fs, newOnly, format, topic, sidecar),
+          commitBins(spark, cfg, layout.render(newOnly), format, topic, sidecar),
           cfg.maxReportedPaths)
-      }
-    } finally probedDf.unpersist(false)
+      } finally probedDf.unpersist(false)
+    }
   }
 
-  /** One chunk's merge plan: quarantine corrupt targets, then union the
+  /** Merge-planning probe of one target bin: None when absent, else
+    * (path, state, header) with state 0 = exists (zip mode: no header
+    * needed), 1 = readable with header ("" for JSON), 2 = exists but
+    * unreadable/corrupt. Runs executor-side.
+    */
+  private[jobs] def probeBin(fs: FileSystem, outputRoot: String, p: String,
+      wantHeader: Boolean, format: String): Option[(String, Int, String)] = {
+    val full = new HPath(s"$outputRoot/$p")
+    if (!fs.exists(full)) None
+    else if (!wantHeader) Some((p, 0, ""))
+    else if (!sniffReadable(fs, full.toString)) Some((p, 2, ""))
+    else if (format == "json") Some((p, 1, ""))
+    else readHeaderLine(fs, full) match {
+      case Some(h) => Some((p, 1, h))
+      case None => Some((p, 2, ""))
+    }
+  }
+
+  /** One chunk's merge plan: quarantine corrupt targets, then join the
     * chunk's new rows with ONE reader per distinct header (CSV) / one
     * overall (JSON) — O(attempt-schemas) plan nodes per chunk, not
     * O(bins); each reader carries the known relative bin path as `__path`
-    * so all bins of a group load in a single distributed scan.
+    * so all bins of a group load in a single distributed scan. `attach`
+    * does the join ([[attachByName]] unless a layout says otherwise).
     *
     * Zip bins (which Spark's readers cannot decompress) are streamed into
     * ONE temp directory on the output filesystem, mirroring their relative
@@ -482,13 +587,22 @@ object Restructure {
       spark: SparkSession, cfg: RestructureJobConfig, fs: FileSystem,
       preparedChunk: DataFrame, chunk: Seq[(String, Int, String)],
       format: String, jsonSchema: Option[StructType],
-      temps: scala.collection.mutable.Buffer[HPath]): DataFrame = {
+      temps: scala.collection.mutable.Buffer[HPath],
+      attach: (DataFrame, Seq[(String, DataFrame)]) => DataFrame = attachByName): DataFrame = {
     chunk.collect { case (p, 2, _) => p }
       .foreach(p => quarantine(fs, new HPath(s"${cfg.outputRoot}/$p")))
     val headered = chunk.collect { case (p, s, h) if s != 2 => (p, h) }
     val (frames, failed) = existingBinFrames(spark, fs, cfg.outputRoot,
       headered, format, jsonSchema, cfg.zip, temps)
     failed.foreach(p => quarantine(fs, new HPath(s"${cfg.outputRoot}/$p")))
+    attach(preparedChunk, frames)
+  }
+
+  /** Union existing-bin frames into a chunk's new rows by column name;
+    * existing rows sort before any new file.
+    */
+  private[jobs] def attachByName(fresh: DataFrame,
+      existing: Seq[(String, DataFrame)]): DataFrame = {
     // Drifted-column visibility: a bin is rewritten with the column UNION
     // of its chunk's frame, so when existing bins carry columns the batch
     // schema lacks, the rewritten header depends on hash-based chunk
@@ -496,15 +610,15 @@ object Restructure {
     // Surface it instead of staying silent (the doc comment on
     // mergeCommitBins explains why the per-chunk union is still the
     // semantically meaningful set).
-    val driftedCols = frames.iterator.flatMap(_.columns).toSet -
-      "__path" -- preparedChunk.columns
+    val driftedCols = existing.iterator.flatMap(_._2.columns).toSet -
+      "__path" -- fresh.columns
     if (driftedCols.nonEmpty)
       Console.err.println(
         s"[graft] existing bins carry ${driftedCols.size} column(s) absent from the " +
           s"batch schema (${driftedCols.toSeq.sorted.take(8).mkString(", ")}" +
           s"${if (driftedCols.size > 8) ", …" else ""}); rewritten headers will union " +
           "per merge chunk, so header column sets may vary run to run on this store")
-    frames.foldLeft(preparedChunk) { (acc, stored) =>
+    existing.foldLeft(fresh) { case (acc, (_, stored)) =>
       val old = stored
         .withColumn(AvroRead.FileCol, lit("")) // sorts before any real file
         .withColumn(AvroRead.PosCol, monotonically_increasing_id())
@@ -515,8 +629,9 @@ object Restructure {
   /** Readers over a chunk's EXISTING bins — the ONE place the scanned-row
     * → bin-path mapping is defined (shared by [[mergeChunk]] and
     * [[Cleaner.verifyTopic]], which previously each built it): one
-    * DataFrame per distinct CSV header (one overall for JSON), each
-    * carrying the known relative bin path as its `__path` column. Zip
+    * DataFrame per distinct CSV header (one overall for JSON, header ""),
+    * each paired with its header line and carrying the known relative bin
+    * path as its `__path` column. Zip
     * bins stream into one dot-prefixed temp directory first (appended to
     * `temps` for recursive post-use cleanup), with each bin's real header
     * read off the unzipped file. Returns (frames, failed): `failed` = zip
@@ -530,7 +645,7 @@ object Restructure {
       headered: Seq[(String, String)], format: String,
       jsonSchema: Option[StructType], zip: Boolean,
       temps: scala.collection.mutable.Buffer[HPath])
-      : (Seq[DataFrame], Seq[String]) = {
+      : (Seq[(String, DataFrame)], Seq[String]) = {
     val (scanRoot, suffix, avail, failed) =
       if (!zip) (outputRoot, "", headered, Nil)
       else {
@@ -559,7 +674,7 @@ object Restructure {
             // schemaless caller (none exists today): one inference pass,
             // then the same bespoke read
             spark.read.json(members.map(p => s"$scanRoot/$p$suffix"): _*).schema)
-          readJsonBinFiles(spark, scanRoot, suffix, members, sch)
+          "" -> readJsonBinFiles(spark, scanRoot, suffix, members, sch)
         }
       } else {
         // CSV bins go through [[readCsvBinFiles]] — a distributed
@@ -570,7 +685,7 @@ object Restructure {
         // reference-scale 50k-bin store would spend the append in reader
         // setup. __path is the known relative path directly.
         avail.groupBy(_._2).toSeq.map { case (h, members) =>
-          readCsvBinFiles(spark, scanRoot, suffix, members.map(_._1), h)
+          h -> readCsvBinFiles(spark, scanRoot, suffix, members.map(_._1), h)
         }
       }
     (frames, failed)
@@ -847,77 +962,28 @@ object Restructure {
     *
     * Spark shape: one pass computes a per-record canonical SHAPE string
     * ([[graft.model.DynamicShape]]) whose md5 is the header fingerprint;
-    * attempt numbers are assigned by first appearance (file, pos) of each
-    * fingerprint within the topic batch; each fingerprint group is written
+    * groups are ordered by first appearance (file, pos) of each
+    * fingerprint within the topic batch; each group's rows are rendered
     * with ITS OWN recursively-expanded header, derived by parsing the
-    * group's (uniform) shape string back into a tree.
+    * group's (uniform) shape string back into a tree. All groups then
+    * share one job that resolves attempt slots and probes their targets,
+    * one merge plan and one commit, so the job count does not grow with
+    * the number of shapes.
     */
   private[graft] def writeCsvBinsDynamic(
       spark: SparkSession, cfg: RestructureJobConfig, fs: FileSystem, topic: String,
       df: DataFrame, dataSchema: StructType, timeCol: Column, template: String,
-      tCfg: TopicJobConfig, sidecar: Option[Array[Byte]] = None): WrittenBins = {
+      tCfg: TopicJobConfig, sidecar: Option[Array[Byte]] = None): Committed = {
     import graft.model.DynamicShape
-    // persisted once: the fingerprint groups' headers come from ONE
-    // aggregation over this frame, and each group's write re-reads it from
-    // cache — job count and scan count stay independent of group count
-    // (previously: one agg job + one full source re-scan PER group)
+    import spark.implicits._
+    // persisted once: group discovery and the commit both read this frame,
+    // so the source is decoded once whatever the number of shapes
     val withFp = df
       .withColumn("__shape", DynamicShape.rootShapeCol(dataSchema))
       .withColumn("__fp", md5(col("__shape").cast(BinaryType)))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
 
-    // one pass: per-fingerprint first appearance (attempt order — reference:
-    // arrival order) AND the group's concrete shape (uniform within the
-    // group by construction — any row's value serves)
-    // limit(cap+1) BEFORE the collect: the cap check below must fire from a
-    // bounded driver materialization. A pathological batch (per-row-unique
-    // map keys → millions of distinct shapes, each carrying its full shape
-    // string) would otherwise materialize the whole group table on the
-    // driver just to throw the capped error — OOM instead of the designed
-    // fail-with-cure. orderBy before limit keeps attempt order intact for
-    // the ≤cap case that proceeds.
-    val groupRows = withFp
-      .groupBy(col("__fp"))
-      .agg(min(struct(col(AvroRead.FileCol), col(AvroRead.PosCol))).as("__first"),
-        first(col("__shape")).as("__gshape"))
-      .orderBy(col("__first"))
-      .limit(cfg.maxSchemaFingerprints + 1)
-      .collect()
     try {
-      // enforced bound on the per-group pass: each header shape filters the
-      // CACHED frame once (the source is scanned once, into the persist
-      // above), so total work grows linearly with shape count — fine for
-      // the schema-drift topics this serves (a handful of shapes),
-      // pathological beyond it. Fail with a cure instead of grinding
-      // through thousands of cache passes. INSIDE the try: per-topic
-      // failure isolation keeps the run alive after this throw, so the
-      // finally must still release the cached batch.
-      require(groupRows.length <= cfg.maxSchemaFingerprints,
-        s"topic $topic has more than ${cfg.maxSchemaFingerprints} distinct map-key/array-arity " +
-          s"header shapes in one batch (cap ${cfg.maxSchemaFingerprints}); each shape writes its own header " +
-          "in its own pass over the cached batch. Fix the producer schema drift, raise " +
-          "worker.maxSchemaFingerprints, or process in smaller batches " +
-          "(worker.maxFilesPerTopic) so fewer shapes land per run")
-      groupRows.toSeq.map { row =>
-      val fp = row.getString(row.fieldIndex("__fp"))
-      val group = withFp.filter(col("__fp") === fp).drop("__fp", "__shape")
-      val exclude = cfg.allExcludeFields(topic)
-      // excludeFields match FLATTENED names, so map-key / array-index
-      // expansions filter on their expanded form too (reference golden:
-      // excludeFields {a, i.other} drops the i.other map column,
-      // CsvAvroConverterTest.kt:69-84)
-      val shapes = DynamicShape.parseRoot(
-        row.getString(row.fieldIndex("__gshape")), dataSchema)
-      val outCols = DynamicShape.expandRoot(dataSchema, shapes, exclude)
-      // attempt resolution consults EXISTING target headers (reference
-      // semantics: arrival order against existing files,
-      // RestructureWorker.kt:163-183): a bin whose file already holds this
-      // group's header reuses that attempt; otherwise the first free slot.
-      // Groups commit sequentially, so earlier groups' files are visible.
-      // the stored header is written by Spark's CSV writer, which quotes
-      // fields containing delimiter/quote/newline (map keys can hold any of
-      // these) — apply the same quoting before comparing
-      val header = outCols.map(c => csvQuote(dataColName(c))).mkString(",")
       val params = PathTemplate.fixedParams(dataSchema, timeCol, lit(topic),
         cfg.extension, cfg.timeBinFormat)
       val plainPathCol = PathTemplate.compile(template, params, Some(timeCol), Some(dataSchema),
@@ -927,38 +993,119 @@ object Restructure {
         concat(bucketWithFallback(cfg,
             PathTemplate.compile(bt, params, Some(timeCol), Some(dataSchema), cfg.pathPlugins)),
           lit("/"), plainPathCol))
-      val withBase = group.select(outCols ++ Seq(
-        basePathCol.as("__base"), col(AvroRead.FileCol), col(AvroRead.PosCol)): _*)
-      // attempt slots resolve EXECUTOR-side (one exists/header probe chain
-      // per distinct base path, distributed like the merge planning above).
-      // Groups still commit sequentially, so earlier groups' files are
-      // visible to later groups' probes.
+      // one pass: per fingerprint, its first appearance (attempt order —
+      // reference: arrival order), the group's concrete shape (uniform
+      // within the group by construction — any row's value serves) and the
+      // base paths it writes to. limit(cap+1) BEFORE the collect: the cap
+      // check below must fire from a bounded driver materialization. A
+      // pathological batch (per-row-unique map keys → millions of distinct
+      // shapes, each carrying its full shape string) would otherwise
+      // materialize the whole group table on the driver just to throw the
+      // capped error — OOM instead of the designed fail-with-cure.
+      val capped = withFp
+        .groupBy(col("__fp"))
+        .agg(min(struct(col(AvroRead.FileCol), col(AvroRead.PosCol))).as("__first"),
+          first(col("__shape")).as("__gshape"),
+          collect_set(basePathCol).as("__bases"),
+          max(basePathCol.isNull).as("__nullBase"))
+        .limit(cfg.maxSchemaFingerprints + 1)
+        .collect()
+      // enforced bound: every shape adds its own rendering branch over the
+      // cached batch, so plan size and scan work grow linearly with shape
+      // count — fine for the schema-drift topics this serves (a handful of
+      // shapes), pathological beyond it. Fail with a cure instead. INSIDE
+      // the try: per-topic failure isolation keeps the run alive after
+      // this throw, so the finally must still release the cached batch.
+      require(capped.length <= cfg.maxSchemaFingerprints,
+        s"topic $topic has more than ${cfg.maxSchemaFingerprints} distinct map-key/array-arity " +
+          s"header shapes in one batch (cap ${cfg.maxSchemaFingerprints}); each shape renders " +
+          "its own header in its own pass over the cached batch. Fix the producer schema drift, " +
+          "raise worker.maxSchemaFingerprints, or process in smaller batches " +
+          "(worker.maxFilesPerTopic) so fewer shapes land per run")
+      require(!capped.exists(r => r.getBoolean(r.fieldIndex("__nullBase"))),
+        s"topic $topic: the path template yielded a null bin path")
+      if (capped.isEmpty) return Committed.empty
+      // attempt order in Spark's struct order: the file name by UTF-8
+      // bytes, then the position
+      def firstOf(r: org.apache.spark.sql.Row): (Array[Byte], Long) = {
+        val f = r.getStruct(r.fieldIndex("__first"))
+        (f.getString(0).getBytes(java.nio.charset.StandardCharsets.UTF_8), f.getLong(1))
+      }
+      val groupRows = capped.map(r => (firstOf(r), r)).sortWith { case (((fa, pa), _), ((fb, pb), _)) =>
+        val c = java.util.Arrays.compareUnsigned(fa, fb)
+        c < 0 || (c == 0 && pa < pb)
+      }.map(_._2).toIndexedSeq
+
+      // excludeFields match FLATTENED names, so map-key / array-index
+      // expansions filter on their expanded form too (reference golden:
+      // excludeFields {a, i.other} drops the i.other map column,
+      // CsvAvroConverterTest.kt:69-84)
+      val exclude = cfg.allExcludeFields(topic)
+      val groupCols = groupRows.map { row =>
+        val shapes = DynamicShape.parseRoot(row.getString(row.fieldIndex("__gshape")), dataSchema)
+        row.getString(row.fieldIndex("__fp")) -> DynamicShape.expandRoot(dataSchema, shapes, exclude)
+      }
+      val names = groupCols.map(_._2.map(dataColName))
+      // the stored header is written by the bin writer, which quotes
+      // fields containing delimiter/quote/newline (map keys can hold any of
+      // these) — the attempt-slot comparison uses the same quoting
+      val headers = names.map(_.map(csvQuote).mkString(","))
+
+      // attempt slots resolve EXECUTOR-side in ONE job over the base paths
+      // (no shuffle: the group table above already lists each group's
+      // bases): a task resolves each base path's groups in group order
+      // against the existing files (reference semantics: arrival order
+      // against existing files, RestructureWorker.kt:163-183), with slots
+      // claimed earlier in the batch counted as holding that group's header
+      // — what sequential per-group commits would have seen — and probes
+      // every chosen target for the merge in the same pass.
+      // The result is materialized exactly once: it is FS-state-dependent
+      // (exists/header probes), and the merge planning and the commit must
+      // see one FS snapshot — a lazy plan re-evaluated per action could
+      // assign diverging attempt slots if quarantine renames happen in
+      // between, routing rows to a bin never probed for merging. The
+      // mapping is one row per (bin, group), the same cardinality the
+      // broadcast join holds on the driver anyway.
+      val byBase = groupRows.zipWithIndex
+        .flatMap { case (row, g) => row.getSeq[String](row.fieldIndex("__bases")).map(_ -> g) }
+        .groupMap(_._1)(_._2).toSeq
       val confEntries = AvroRead.fsConfEntries(spark)
       val outputRoot = cfg.outputRoot
       val ext = cfg.extension
-      val hdr = header
-      import spark.implicits._
-      // the probing itself is distributed, but the RESULT is materialized
-      // exactly once: mapDf is FS-state-dependent (exists/header probes),
-      // and its two consumers (mergeCommitBins' planning job and the
-      // commit join) must see one FS snapshot — a lazy plan re-evaluated
-      // per action could assign diverging attempt slots if quarantine
-      // renames happen in between, routing rows to a bin never probed for
-      // merging. The mapping is one row per bin this group touches, the
-      // same cardinality the broadcast join holds on the driver anyway.
-      val attemptPairs = withBase.select(col("__base")).distinct().as[String].mapPartitions { it =>
-        if (it.isEmpty) Iterator.empty
-        else {
-          val conf = new org.apache.hadoop.conf.Configuration()
-          confEntries.foreach { case (k, v) => conf.set(k, v) }
-          val pfs = new HPath(outputRoot).getFileSystem(conf)
-          it.map(bp => (bp, resolveAttemptPath(pfs, outputRoot, ext, bp, hdr)))
-        }
-      }.collect()
-      val mapDf = spark.createDataset(attemptPairs.toSeq).toDF("__base", "__path")
-      val prepared = withBase.join(broadcast(mapDf), "__base").drop("__base")
-      mergeCommitBins(spark, cfg, fs, prepared, "csv", None, topic, sidecar)
-      }.foldLeft(WrittenBins.empty)(_.merge(_, cfg.maxReportedPaths))
+      val wantHeader = !cfg.zip
+      val hdrs = headers.toArray
+      val resolved = Timer.time("write.open")(spark.sparkContext
+        .parallelize(byBase, math.max(1, math.min(byBase.size, spark.sparkContext.defaultParallelism)))
+        .mapPartitions { it =>
+          if (it.isEmpty) Iterator.empty
+          else {
+            val conf = new org.apache.hadoop.conf.Configuration()
+            confEntries.foreach { case (k, v) => conf.set(k, v) }
+            val pfs = new HPath(outputRoot).getFileSystem(conf)
+            it.map { case (base, grps) =>
+              val paths = resolveAttemptSlots(pfs, outputRoot, ext, base, grps.map(hdrs(_)))
+              (grps.zip(paths).map { case (g, p) => (base, g, p) },
+                paths.distinct.flatMap(p => probeBin(pfs, outputRoot, p, wantHeader, "csv")))
+            }
+          }
+        }.collect())
+      val mapDf = spark.createDataset(resolved.toSeq.flatMap(_._1)).toDF("__base", "__grp", "__path")
+
+      // every group rendered with its own columns (positional `__c<i>`, so
+      // column names never need quoting), then one union of all groups:
+      // one probe result, one merge plan and one commit for the topic
+      val fresh = groupCols.zipWithIndex.map { case ((fp, outCols), g) =>
+        val cols = outCols.indices.map(i => s"__c$i")
+        val (key, line) = keyAndLine(cfg, topic, "csv", names(g), cols.map(col))
+        withFp.filter(col("__fp") === fp)
+          .select(outCols.zip(cols).map { case (c, n) => c.as(n) } ++ Seq(
+            basePathCol.as("__base"), col(AvroRead.FileCol), col(AvroRead.PosCol)): _*)
+          .select(col("__base"), lit(g).as("__grp"), col(AvroRead.FileCol),
+            col(AvroRead.PosCol), key.as("__key"), line.as("__line"))
+      }.reduce(_ union _)
+      val prepared = fresh.join(broadcast(mapDf), Seq("__base", "__grp")).drop("__base")
+      mergeCommitBins(spark, cfg, fs, prepared, "csv", None, topic, sidecar,
+        new ShapeGroupLayout(cfg, topic, names), Some(resolved.toSeq.flatMap(_._2)))
     } finally withFp.unpersist(false)
   }
 
@@ -994,27 +1141,40 @@ object Restructure {
     (if (i >= 0) s.substring(i + 4) else s).stripPrefix("`").stripSuffix("`")
   }
 
-  /** First free or header-matching attempt slot for `basePath`
-    * (`bin.csv`, `bin_1.csv`, `bin_2.csv`, …). Runs executor-side (static
-    * call, primitive args) so attempt planning distributes with the paths.
+  /** Attempt slots (`bin.csv`, `bin_1.csv`, `bin_2.csv`, …) for the shape
+    * groups writing to `basePath`, given in group order by their header
+    * lines: each group takes the first slot that is free or holds its
+    * header. A slot taken by an earlier group counts as holding that
+    * group's header, so groups with equal headers (e.g. shapes that differ
+    * only in excluded fields) share one slot and the rest move past it.
+    * Runs executor-side (static call, primitive args) so attempt planning
+    * distributes with the paths.
     */
-  private[jobs] def resolveAttemptPath(
+  private[jobs] def resolveAttemptSlots(
       fs: FileSystem, outputRoot: String, extension: String,
-      basePath: String, header: String): String = {
+      basePath: String, headers: Seq[String]): Seq[String] = {
     def withAttempt(i: Int): String =
       if (i == 0) basePath
       else if (basePath.endsWith(extension))
         basePath.dropRight(extension.length) + s"_$i" + extension
       else basePath + s"_$i"
-    var i = 0
-    while (i < 1000) {
-      val cand = withAttempt(i)
-      val full = new HPath(s"$outputRoot/$cand")
-      if (!fs.exists(full)) return cand
-      if (readHeaderLine(fs, full).contains(header)) return cand
-      i += 1
+    // slot → header of what occupies it (None: unreadable)
+    val occupied = scala.collection.mutable.Map.empty[Int, Option[String]]
+    def occupant(i: Int): Option[Option[String]] = occupied.get(i).orElse {
+      val full = new HPath(s"$outputRoot/${withAttempt(i)}")
+      if (!fs.exists(full)) None
+      else {
+        val h = readHeaderLine(fs, full)
+        occupied(i) = h
+        Some(h)
+      }
     }
-    withAttempt(i)
+    headers.map { h =>
+      var i = 0
+      while (i < 1000 && occupant(i).exists(!_.contains(h))) i += 1
+      occupied(i) = Some(h)
+      withAttempt(i)
+    }
   }
 
   /** First header RECORD of a (possibly gzip/zip) CSV bin, or None if
@@ -1079,7 +1239,13 @@ object Restructure {
   private[graft] def writeJsonBins(
       spark: SparkSession, cfg: RestructureJobConfig, fs: FileSystem, topic: String,
       df: DataFrame, dataSchema: StructType, pathCol: Column, tCfg: TopicJobConfig,
-      sidecar: Option[Array[Byte]] = None): WrittenBins = {
+      sidecar: Option[Array[Byte]] = None): WrittenBins =
+    jsonBins(spark, cfg, fs, topic, df, dataSchema, pathCol, sidecar).bins
+
+  private def jsonBins(
+      spark: SparkSession, cfg: RestructureJobConfig, fs: FileSystem, topic: String,
+      df: DataFrame, dataSchema: StructType, pathCol: Column,
+      sidecar: Option[Array[Byte]]): Committed = {
     // project by the topic's data schema (like csvColumns), NOT df.columns:
     // the frame arrives plugin-enriched, and the __-prefixed enrichment
     // structs must never reach written records or the dedup key
@@ -1092,7 +1258,8 @@ object Restructure {
       Seq("__path", AvroRead.FileCol, AvroRead.PosCol).contains(f.name)))
     // A2 whole-record keep-first dedup happens inside the writer (commitBins
     // keys each rendered record)
-    mergeCommitBins(spark, cfg, fs, prepared, "json", Some(dataOnly), topic, sidecar)
+    mergeCommitBins(spark, cfg, fs, prepared, "json", Some(dataOnly), topic, sidecar,
+      new ByNameLayout(cfg, topic, "json"))
   }
 
   /** RFC4180 minimal quoting as a Column (identical rule to the CSV
@@ -1106,6 +1273,42 @@ object Restructure {
       .otherwise(s)
   }
 
+  /** A record's dedup key and rendered line over its data columns `cols`
+    * (named `names`): JSON → `to_json`, keyed by the md5 of the whole
+    * rendered record (A2); CSV → RFC4180-quoted fields, keyed by
+    * [[csvDedupKey]] (A1). The key is "" when dedup is off.
+    */
+  private def keyAndLine(cfg: RestructureJobConfig, topic: String, format: String,
+      names: Seq[String], cols: Seq[Column]): (Column, Column) = {
+    val line =
+      if (format == "json")
+        to_json(struct(cols: _*), Map("ignoreNullFields" -> "false"))
+      else concat_ws(",", cols.map(csvQuoteCol): _*)
+    val key =
+      if (!cfg.dedupEnabled(topic)) lit("")
+      else if (format == "json") md5(line)
+      else csvDedupKey(cfg, topic, names, cols)
+    (key, line)
+  }
+
+  /** A1 CSV dedup key: md5 over the configured key projection's rendered
+    * values (null ≡ "", exactly the CSV rendering the reference hashes,
+    * format/CsvAvroConverterFactory.kt:30-86 + util/Md5Hasher.kt:6-21).
+    * Key fields are chosen by name; `cols` are the matching values.
+    */
+  private def csvDedupKey(cfg: RestructureJobConfig, topic: String,
+      names: Seq[String], cols: Seq[Column]): Column = {
+    val distinctFields = cfg.dedupDistinctFields(topic)
+    val ignoreFields = cfg.dedupIgnoreFields(topic)
+    val named = names.zip(cols)
+    val keys =
+      if (distinctFields.nonEmpty && distinctFields.subsetOf(names.toSet))
+        named.filter { case (n, _) => distinctFields(n) }
+      else if (ignoreFields.nonEmpty) named.filterNot { case (n, _) => ignoreFields(n) }
+      else named
+    md5(concat_ws("\u0001", keys.map { case (_, c) => coalesce(c, lit("")) }: _*))
+  }
+
   /** One exactly-named output file per bin: rows are rendered to their
     * final output line IN THE PLAN (`concat_ws` of quoted fields for CSV,
     * `to_json` for JSON — both codegen'd), shuffled once on the bin path,
@@ -1113,38 +1316,15 @@ object Restructure {
     * (invisible to Spark readers) swapped atomically onto the target — the
     * K8 temp→target commit without a committer temp tree, per-file rename
     * pass, or driver-side zip repack. Renames parallelize across tasks, so
-    * commit cost scales with executors instead of a driver pool.
+    * commit cost scales with executors instead of a driver pool. Each bin's
+    * header comes from the broadcast header table by its rows' group. The
+    * tasks also count the rows they take from each source file, which
+    * sizes open-ended files in the ledger without a counting scan.
     */
-  /** A1 CSV dedup key: md5 over the configured key projection's rendered
-    * values (null ≡ "", exactly the CSV rendering the reference hashes,
-    * format/CsvAvroConverterFactory.kt:30-86 + util/Md5Hasher.kt:6-21).
-    */
-  private def csvDedupKey(cfg: RestructureJobConfig, topic: String,
-      dataNames: Seq[String]): Column = {
-    val distinctFields = cfg.dedupDistinctFields(topic)
-    val ignoreFields = cfg.dedupIgnoreFields(topic)
-    val keys =
-      if (distinctFields.nonEmpty && distinctFields.subsetOf(dataNames.toSet))
-        dataNames.filter(distinctFields)
-      else if (ignoreFields.nonEmpty) dataNames.filterNot(ignoreFields)
-      else dataNames
-    md5(concat_ws("\u0001", keys.map(n => coalesce(col(s"`$n`"), lit(""))): _*))
-  }
-
   private def commitBins(
-      spark: SparkSession, cfg: RestructureJobConfig, fs: FileSystem,
-      df: DataFrame, format: String, topic: String,
-      sidecar: Option[Array[Byte]] = None): WrittenBins = {
+      spark: SparkSession, cfg: RestructureJobConfig, in: CommitInput,
+      format: String, topic: String, sidecar: Option[Array[Byte]]): Committed = {
     import spark.implicits._
-    val dataCols = df.columns.toSeq
-      .filterNot(Seq("__path", AvroRead.FileCol, AvroRead.PosCol).contains)
-    val lineCol =
-      if (format == "json")
-        to_json(struct(dataCols.map(n => col(s"`$n`")): _*),
-          Map("ignoreNullFields" -> "false"))
-      else concat_ws(",", dataCols.map(n => csvQuoteCol(col(s"`$n`"))): _*)
-    val header = if (format == "json") None
-                 else Some(dataCols.map(csvQuote).mkString(","))
     // dedup runs INSIDE the writer on the already-sorted stream (A1
     // keep-last buffers one bin's survivors — the reference's own per-file
     // memory shape; A2 keep-first streams against a seen-set), so the
@@ -1154,18 +1334,16 @@ object Restructure {
       if (!cfg.dedupEnabled(topic)) BinWriter.DedupOff
       else if (format == "json") BinWriter.DedupKeepFirst
       else BinWriter.DedupKeepLast
-    val keyCol =
-      if (dedupMode == BinWriter.DedupOff) lit("")
-      else if (format == "json") md5(lineCol) // A2: whole rendered record
-      else csvDedupKey(cfg, topic, dataCols)
     // explicit width: with plain repartition(col), AQE coalesces this tiny
     // shuffle to one partition and a single task writes every bin file
     // serially — the file-create calls, not the rows, are the bottleneck
-    val prepared = df
+    val prepared = in.rows
       .repartition(spark.sparkContext.defaultParallelism, col("__path"))
-      .sortWithinPartitions(col("__path"), col(AvroRead.FileCol), col(AvroRead.PosCol))
-      .select(col("__path"), keyCol.as("__key"), lineCol.as("__line"))
-      .as[(String, String, String)]
+      .sortWithinPartitions(
+        col("__path") +: in.group.toSeq :+ col(AvroRead.FileCol) :+ col(AvroRead.PosCol): _*)
+      .select(col("__path"), in.group.getOrElse(lit(0)).as("__grp"), col(AvroRead.FileCol),
+        in.key.as("__key"), in.line.as("__line"))
+      .as[(String, Int, String, String, String)]
     val confEntries = AvroRead.fsConfEntries(spark)
     val outputRoot = cfg.outputRoot
     val gz = cfg.gzip
@@ -1180,16 +1358,26 @@ object Restructure {
     // ship O(bins) strings to the driver (the write itself is untouched —
     // one task writes its partition's bins either way)
     val cap = math.max(0, cfg.maxReportedPaths)
-    val parts = Timer.time("write.convert")(prepared.mapPartitions { it =>
-      val out = BinWriter.writePartition(it, outputRoot, confEntries, header, gz, zip, dedupMode,
-        uid, gid, sidecarEntry, runId)
-      var n = 0L
-      val sample = scala.collection.mutable.ArrayBuffer.empty[String]
-      out.foreach { p => n += 1L; if (sample.length < cap) sample += p }
-      Iterator.single((n, sample.toSeq))
-    }.collect())
-    WrittenBins(parts.iterator.map(_._1).sum,
-      parts.iterator.flatMap(_._2).toSeq.sorted.take(cap))
+    val headers = spark.sparkContext.broadcast(in.headers.toArray)
+    val parts =
+      try Timer.time("write.convert")(prepared.mapPartitions { it =>
+        val fileRows = scala.collection.mutable.HashMap.empty[String, Long]
+        val rows = it.map { case (p, g, f, k, l) =>
+          if (f.nonEmpty) fileRows.update(f, fileRows.getOrElse(f, 0L) + 1L)
+          (p, g, k, l)
+        }
+        val out = BinWriter.writeBins(rows, outputRoot, confEntries, headers.value(_), gz, zip,
+          dedupMode, uid, gid, sidecarEntry, runId)
+        var n = 0L
+        val sample = scala.collection.mutable.ArrayBuffer.empty[String]
+        out.foreach { p => n += 1L; if (sample.length < cap) sample += p }
+        Iterator.single((n, sample.toSeq, fileRows.toMap))
+      }.collect())
+      finally headers.destroy()
+    Committed(
+      WrittenBins(parts.iterator.map(_._1).sum,
+        parts.iterator.flatMap(_._2).toSeq.sorted.take(cap)),
+      addCounts(Map.empty, parts.iterator.flatMap(_._3)))
   }
 
   /** Legacy `offsets/<topic>.csv` migration on startup (reference

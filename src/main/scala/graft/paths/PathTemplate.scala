@@ -193,7 +193,7 @@ object PathTemplate {
       "topic"     -> topic,
       // attempt 0 renders as "" (reference toAttemptSuffix); static-schema
       // topics never write attempt>0, the dynamic path overrides this slot
-      // executor-side (Restructure.resolveAttemptPath)
+      // executor-side (Restructure.resolveAttemptSlots)
       "attempt"   -> lit(""),
       "extension" -> lit(extension),
       "filename"  -> concat(TimeExtract.timeBin(timeEpochSec, timeBinFormat), lit(extension)))

@@ -64,4 +64,28 @@ class RepetitionShapeSpec extends SparkSpec {
       prop)
     assert(res.passed, s"repetition shape fuzz failed: ${res.status}")
   }
+
+  test("q_repetition ≡ declarative per document, null text included (all signals NULL)") {
+    val dir = java.nio.file.Files.createTempDirectory("graft-repetition")
+    Seq[(Long, String)]((1L, null), (2L, ""), (3L, "a a b a"), (4L, "x"), (5L, "p q p q"))
+      .toDF("doc_id", "text").write.parquet(dir.resolve("documents.parquet").toString)
+    val got = SparkEntry.queries("q_repetition")(spark, dir.toString).collect().toSeq
+    // the pre-r19 declarative form over the same tokenizer
+    val ws = graft.functions.TextFunctions.words(col("text"))
+    val bg = when(size(ws) < 2, array().cast(ArrayType(StringType)))
+      .otherwise(transform(sequence(lit(0), size(ws) - 2),
+        i => concat(element_at(ws, i + 1), lit(" "), element_at(ws, i + 2))))
+    val want = spark.read.parquet(dir.resolve("documents.parquet").toString)
+      .select(col("doc_id"),
+        size(ws).cast(LongType).as("n_tokens"),
+        size(array_distinct(ws)).cast(LongType).as("n_distinct_tokens"),
+        aggregate(array_distinct(ws), lit(0),
+          (acc, tok) => greatest(acc, size(filter(ws, w => w === tok)))).cast(LongType)
+          .as("top_token_freq"),
+        size(bg).cast(LongType).as("n_bigrams"),
+        size(array_distinct(bg)).cast(LongType).as("n_distinct_bigrams"))
+      .orderBy(col("doc_id")).collect().toSeq
+    assert(got == want)
+    assert(got.head.toSeq.tail.forall(_ == null), s"null text must yield NULL signals: ${got.head}")
+  }
 }

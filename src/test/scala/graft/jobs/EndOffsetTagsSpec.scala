@@ -8,7 +8,7 @@ import graft.sources.EndOffsetSource
 
 /** S9 — end offset from object tags: a tagged open-ended file commits the
   * tag's end offset (reference `endOffsetFromTags`,
-  * source/S3SourceStorage.kt:65-85) and skips the record-counting scan.
+  * source/S3SourceStorage.kt:65-85) instead of the rows counted at commit.
   */
 class EndOffsetTagsSpec extends SparkSpec {
 
@@ -33,12 +33,12 @@ class EndOffsetTagsSpec extends SparkSpec {
         jobs.incrementAndGet()
     }
     spark.sparkContext.addSparkListener(listener)
-    try { body; Thread.sleep(300) } // let queued listener events drain
+    try { body; org.apache.spark.ListenerBusDrain(spark.sparkContext) }
     finally spark.sparkContext.removeSparkListener(listener)
     jobs.get()
   }
 
-  test("tagged open-ended file commits the tag's end offset; untagged one pays a counting job") {
+  test("tagged open-ended file commits the tag's end offset; untagged one is sized by the commit at no extra job") {
     val (in, out) = setup()
     val tagged = RestructureJobConfig(
       inputRoot = in.toString, outputRoot = out.toString,
@@ -52,15 +52,15 @@ class EndOffsetTagsSpec extends SparkSpec {
     // tag-derived range: records = to - from + 1
     assert(r.processedTopics.head.records == 5)
 
-    // same input WITHOUT the tag: the open range is closed by counting,
-    // which costs at least one extra Spark job
+    // same input WITHOUT the tag: the open range is closed by the rows the
+    // commit tasks counted while writing — no extra Spark job
     val (in2, out2) = setup()
     val untaggedJobs = countJobs {
       Restructure.run(spark, RestructureJobConfig(
         inputRoot = in2.toString, outputRoot = out2.toString))
     }
-    assert(taggedJobs < untaggedJobs,
-      s"tagged run should skip the counting scan: $taggedJobs vs $untaggedJobs jobs")
+    assert(taggedJobs == untaggedJobs,
+      s"untagged run must not pay a counting job: $taggedJobs vs $untaggedJobs jobs")
   }
 
   test("HadoopXAttr source degrades to None on filesystems without xattr support") {

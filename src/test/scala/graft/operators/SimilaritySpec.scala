@@ -129,7 +129,8 @@ class SimilaritySpec extends SparkSpec {
     spark.sparkContext.addSparkListener(listener)
     try {
       mapping = Similarity.connectedComponents(pairs, verts, maxLocalEdges = 10L)
-      Thread.sleep(300) // let queued listener events drain
+      // deliver every queued listener event before counting
+      org.apache.spark.ListenerBusDrain(spark.sparkContext)
     } finally spark.sparkContext.removeSparkListener(listener)
     import scala.jdk.CollectionConverters._
     assert(!stageNames.asScala.exists(_.contains("count at ")),
@@ -188,7 +189,8 @@ class SimilaritySpec extends SparkSpec {
     try {
       fix = Similarity.hashMinFixpoint(pairs, verts, "vec_a", "vec_b", "vec_id",
         maxIterations = 20)
-      Thread.sleep(300) // let queued listener events drain
+      // deliver every queued listener event before counting
+      org.apache.spark.ListenerBusDrain(spark.sparkContext)
     } finally {
       spark.sparkContext.removeSparkListener(jl)
       spark.listenerManager.unregister(ql)
