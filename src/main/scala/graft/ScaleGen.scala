@@ -3,12 +3,13 @@ package graft
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-/** Deterministic NATIVE scale-factor generator for the bench's larger-scale
-  * section: the driver's TESTDATA tooling is not shipped, so this
-  * re-creates its tables at bigger sf from the OBSERVED sf0.1 schemas and
-  * distributions (TESTDATA.md; distribution probe in PLANS.md round-15) —
+/** Deterministic NATIVE scale-factor generator for larger-scale oracle
+  * runs (`Verify`'s native pass, `tools/native_verify.sh`): the TESTDATA
+  * tooling is not shipped, so this re-creates its tables at bigger sf
+  * from the OBSERVED sf0.1 schemas and distributions (TESTDATA.md;
+  * distribution probe in PLANS.md round-15) —
   * real cardinalities, real file counts, and natural parquet row-group
-  * layout, as opposed to the sf1x10 section's ×10 replication of sf0.1.
+  * layout, as opposed to a ×10 replication of sf0.1.
   *
   * Everything derives from xxhash64 of the row id — no RNG state, no
   * driver loops — so generation is one distributed projection per table
@@ -76,7 +77,7 @@ object ScaleGen {
 
   /** Generate ALL ten TESTDATA tables into `outDir` (documents, embeddings,
     * customer, supplier, part, orders, lineitem, events, nation, region) —
-    * enough for the FULL oracle query set, not just the heavy bench
+    * enough for the FULL oracle query set, not just a heavy
     * subset — scaled so `sfRatio` = 1.0 reproduces sf0.1's cardinalities
     * (10.0 = native sf1). `baseDir` supplies the fixed-cardinality
     * dimensions (nation/region copy through unscaled). Returns outDir.

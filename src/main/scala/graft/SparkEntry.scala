@@ -434,10 +434,8 @@ object SparkEntry {
 
   /** MinHash + LSH candidate near-duplicate pairs. */
   private def qMinhashPairs(implicit s: SparkSession, d: String): DataFrame =
-    // lazy (materialize = false): the pairs are consumed exactly once, so
-    // the eager persist+count barrier would only add two blocking jobs
     TextDedup.minhashCandidatePairs(t("documents"), "doc_id", "text",
-        shingleN = 3, k = 12, bands = 6, rowsPerBand = 2, materialize = false)
+        shingleN = 3, k = 12, bands = 6, rowsPerBand = 2)
       .orderBy(col("doc_a"), col("doc_b"))
 
   /** MinHash calibration: for every LSH candidate pair, the signature
@@ -457,7 +455,7 @@ object SparkEntry {
     val docs = t("documents")
     val sets = TextDedup.distinctShingleSets(docs, "doc_id", "text", 3)
     val pairs = TextDedup.minhashCandidatePairsFromSets(sets, "doc_id",
-      k = 12, bands = 6, rowsPerBand = 2, materialize = false)
+      k = 12, bands = 6, rowsPerBand = 2)
     val sigs = TextDedup.minhashSignaturesFromSets(sets, "doc_id", k = 12)
     // ONE combined attach frame (doc_id, signature lanes, shingle set): the
     // signature agg's output is already hash-partitioned by doc_id, so this
@@ -521,8 +519,7 @@ object SparkEntry {
   private def qSourceOverlap(implicit s: SparkSession, d: String): DataFrame = {
     val docs = t("documents")
     val pairs = TextDedup.minhashCandidatePairs(docs, "doc_id", "text",
-      shingleN = 3, k = 12, bands = 6, rowsPerBand = 2, materialize = false,
-      carryCols = Seq("source"))
+      shingleN = 3, k = 12, bands = 6, rowsPerBand = 2, carryCols = Seq("source"))
     pairs
       .select(least(col("__a_source"), col("__b_source")).as("source_a"),
         greatest(col("__a_source"), col("__b_source")).as("source_b"))
@@ -576,7 +573,7 @@ object SparkEntry {
     * recomputed in DuckDB from the same md5 halves).
     */
   private def qSimhashPairs(implicit s: SparkSession, d: String): DataFrame =
-    TextDedup.simhashCandidatePairs(t("documents"), "doc_id", "text", materialize = false)
+    TextDedup.simhashCandidatePairs(t("documents"), "doc_id", "text")
       .select(col("doc_a"), col("doc_b"), col("hamming").cast(LongType).as("hamming"))
       .orderBy(col("doc_a"), col("doc_b"))
 

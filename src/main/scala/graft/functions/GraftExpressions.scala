@@ -490,13 +490,21 @@ object GraftExpressions {
     * NOT covered by any `w`-token window whose 1-based start position is in
     * `starts`. Byte-identical to the declarative
     * `transform(filter(sequence(1, n), i => !exists(starts, s => i >= s &&
-    * i < s + w)), i => element_at(toks, i))` — but one difference-array
-    * coverage pass, O(n + |starts|), where the HOF cascade walks the whole
-    * starts array per token position (O(n·|starts|) interpreted lambda
-    * evals, and the optimizer additionally duplicated the filter tree into
-    * both its consumers). Null/empty inputs → the declarative tree's empty
-    * branches; out-of-range starts (never produced — window starts are
-    * ≤ n-w+1 by construction) mask nothing beyond the token range.
+    * i < s + w)), i => element_at(toks, i))` for a null-free `starts` —
+    * but one difference-array coverage pass, O(n + |starts|), where the
+    * HOF cascade walks the whole starts array per token position
+    * (O(n·|starts|) interpreted lambda evals, and the optimizer
+    * additionally duplicated the filter tree into both its consumers).
+    * Null/empty inputs → the declarative tree's empty branches;
+    * out-of-range starts (never produced — window starts are ≤ n-w+1 by
+    * construction) mask nothing beyond the token range.
+    *
+    * PRECONDITION (also for the SQL `graft_mask_tokens`): `starts` holds
+    * no null element. The kernel skips a null start and keeps every token
+    * no other start covers, while the declarative `!exists(...)` yields
+    * NULL for those tokens and the filter drops them. The engine's one
+    * caller, `TextDedup.maskSpansByFingerprints`, builds `starts` with
+    * `collect_set`, which emits no nulls.
     */
   def maskTokensKernel(toks: ArrayData, starts: ArrayData, w: Int): ArrayData = {
     if (toks == null) return emptyStringArray

@@ -70,15 +70,15 @@ object Cleaner {
           }
           .take(fileLimit)
         if (eligible.nonEmpty) {
-          val missingByFile = graft.util.Timer.time("cleaner.contains")(
-            verifyTopic(spark, cfg, topic, eligible.map(_._1.getPath.toString)))
+          val missingByFile =
+            verifyTopic(spark, cfg, topic, eligible.map(_._1.getPath.toString))
           eligible.foreach { case (st, r) =>
             val name = st.getPath.getName
             if (missingByFile.getOrElse(name, 0L) == 0L) {
               // resolve the FS per file: roots may live on different stores
-              val removed = graft.util.Timer.time("cleaner.delete")(st.getPath
+              val removed = st.getPath
                 .getFileSystem(spark.sparkContext.hadoopConfiguration)
-                .delete(st.getPath, false))
+                .delete(st.getPath, false)
               // CHECK the boolean: a false return would report a surviving
               // file as deleted. The file stays eligible and re-verifies
               // next run, so a warn is the right severity.
@@ -237,8 +237,8 @@ object Cleaner {
       val chunkSize = math.max(1, cfg.mergeChunkBins)
       // one pass, as in Restructure.mergeCommitBins: at most chunkSize+1
       // probe rows tell the no-target, single-chunk and chunked cases apart
-      lazy val head = graft.util.Timer.time("cleaner.cache")(
-        probed.limit(math.min(chunkSize.toLong + 1, Int.MaxValue).toInt).collect().toSeq)
+      lazy val head =
+        probed.limit(math.min(chunkSize.toLong + 1, Int.MaxValue).toInt).collect().toSeq
       if (timeField.isEmpty || head.isEmpty) countMissing(withTime, counts)
       else if (head.size <= chunkSize) countAgainst(withTime, head)
       else {
@@ -251,7 +251,7 @@ object Cleaner {
         val probedDf = probed.toDF("__p", "__header")
           .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
         try {
-          val nExisting = graft.util.Timer.time("cleaner.cache")(probedDf.count())
+          val nExisting = probedDf.count()
           val nParts = math.max(1, math.ceil(nExisting.toDouble / chunkSize).toInt)
           val chunks = probedDf.repartition(nParts, col("__p"))
             .as[(String, String)].toLocalIterator().asScala.grouped(chunkSize)

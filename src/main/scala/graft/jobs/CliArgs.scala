@@ -78,8 +78,8 @@ object CliArgs {
       case "--once" :: t => go(t, acc.copy(asService = Some(false)))
       case ("-i" | "--interval") :: v :: t => go(t, acc.copy(pollInterval = Some(v.toLong)))
       case ("-h" | "--help") :: t => go(t, acc.copy(help = true))
-      // accepted for reference CLI parity and ignored: no stage timing is
-      // printed (only graft.Bench turns util.Timer on)
+      // accepted for reference CLI parity and ignored: graft prints no
+      // per-stage timing
       case ("--timer") :: t => go(t, acc)
       case f :: _ if f.startsWith("-") =>
         throw new IllegalArgumentException(s"unknown flag $f\n$usage")

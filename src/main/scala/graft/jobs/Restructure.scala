@@ -8,7 +8,6 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
 import graft.ledger.OffsetRangeSet
-import graft.util.Timer
 import graft.model.Flatten
 import graft.paths.PathTemplate
 import graft.sources.{AvroRead, TopicFiles}
@@ -88,7 +87,7 @@ object Restructure {
 
     val flushLock = new Object
     def flushLedger(): Unit =
-      Timer.time("accounting.flush")(flushLock.synchronized {
+      flushLock.synchronized {
         // Cross-topic lost-update guard (multi-instance only): per-topic
         // locks let two replicas processing DIFFERENT topics flush
         // concurrently, and a bare whole-document save would clobber the
@@ -125,7 +124,7 @@ object Restructure {
           case None =>
             store.fold(saveLedger(fs, cfg.ledger, ledger))(_.set(cfg.ledger, ledger.toJson))
         }
-      })
+      }
 
     // per-topic failure isolation (reference RadarKafkaRestructure.kt:100-103
     // "Failed to map topic", warn + continue): one corrupt file or bad
@@ -230,7 +229,7 @@ object Restructure {
       spark: SparkSession, cfg: RestructureJobConfig, fs: FileSystem,
       topic: String, files: Seq[String], ledger: OffsetRangeSet,
       skip: Map[String, Seq[(Long, Long)]] = Map.empty): TopicResult = {
-    val avroSchema = Timer.time("read")(AvroRead.topicReaderSchema(spark, files))
+    val avroSchema = AvroRead.topicReaderSchema(spark, files)
     val decoded = AvroRead.read(spark, files, Some(avroSchema), skip)
     // persist the decoded batch: a static topic's write reads it twice (the
     // target-bin probe, the bin write itself) and Avro decode is the
@@ -284,14 +283,13 @@ object Restructure {
     // output directory, create-if-absent), along with the stale dot-temp
     // sweep — no driver-side pass over a collected bin-directory list
     val sidecarBytes = Some(avroSchema.toString(true).getBytes("UTF-8"))
-    val written = Timer.time("close.store") {
+    val written =
       if (cfg.format == "json")
         jsonBins(spark, cfg, fs, topic, dfE, dataSchema, pathCol, sidecarBytes)
       else if (hasDynamicLeaves(dataSchema))
         writeCsvBinsDynamic(spark, cfg, fs, topic, dfE, dataSchema, timeCol, template, tCfg,
           sidecarBytes)
       else csvBins(spark, cfg, fs, topic, dfE, dataSchema, pathCol, sidecarBytes)
-    }
 
     // ledger commit: closed ranges are sized by their offset span; an
     // open-ended file (no end offset in the name) is sized by the rows the
@@ -315,13 +313,13 @@ object Restructure {
     // open-ended end offset), but not toward records extracted this run
     val skippedPerFile: Map[String, Long] =
       skip.map { case (n, rs) => n -> rs.map { case (s, e) => e - s + 1 }.sum }
-    Timer.time("accounting.add")(parsed.foreach { case (name, r) =>
+    parsed.foreach { case (name, r) =>
       val to = r.to.getOrElse {
         val total = counts.getOrElse(name, 0L) + skippedPerFile.getOrElse(name, 0L)
         r.from + math.max(total, 1L) - 1
       }
       ledger.add(r.topic, r.partition, r.from, to, processedAt)
-    })
+    }
     val records = parsed.map { case (name, r) =>
       val sk = skippedPerFile.getOrElse(name, 0L)
       r.to.map(t => t - r.from + 1 - sk).getOrElse(counts.getOrElse(name, 1L - math.min(sk, 1L)))
@@ -513,8 +511,8 @@ object Restructure {
         format, topic, sidecar)
       finally temps.foreach(t => fs.delete(t, true))
     }
-    val head = probedBins.getOrElse(Timer.time("write.open")(
-      probed.limit(math.min(chunkSize.toLong + 1, Int.MaxValue).toInt).collect().toSeq))
+    val head = probedBins.getOrElse(
+      probed.limit(math.min(chunkSize.toLong + 1, Int.MaxValue).toInt).collect().toSeq)
     if (head.isEmpty) commitBins(spark, cfg, layout.render(prepared), format, topic, sidecar)
     else if (head.size <= chunkSize) commitChunk(prepared, head)
     else {
@@ -528,7 +526,7 @@ object Restructure {
         .toDF("__p", "__state", "__header")
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       try {
-        val nExisting = Timer.time("write.open")(probedDf.count())
+        val nExisting = probedDf.count()
         val nParts = math.max(1, math.ceil(nExisting.toDouble / chunkSize).toInt)
         var written = Committed.empty
         val chunks = probedDf.repartition(nParts, col("__p"))
@@ -705,7 +703,7 @@ object Restructure {
     * CONSUMER's to close; streams still in flight when the task completes
     * (success, failure, or partial consumption) are closed by a
     * task-completion listener. `ahead <= 0` degrades to plain sequential
-    * opens (the bench's A/B baseline).
+    * opens (the baseline OpenAheadSpec compares against).
     */
   private def openBinsAhead(pfs: FileSystem, root: String, sfx: String,
       paths: Array[String], ahead: Int): Iterator[(String, java.io.InputStream)] = {
@@ -1074,7 +1072,7 @@ object Restructure {
       val ext = cfg.extension
       val wantHeader = !cfg.zip
       val hdrs = headers.toArray
-      val resolved = Timer.time("write.open")(spark.sparkContext
+      val resolved = spark.sparkContext
         .parallelize(byBase, math.max(1, math.min(byBase.size, spark.sparkContext.defaultParallelism)))
         .mapPartitions { it =>
           if (it.isEmpty) Iterator.empty
@@ -1088,7 +1086,7 @@ object Restructure {
                 paths.distinct.flatMap(p => probeBin(pfs, outputRoot, p, wantHeader, "csv")))
             }
           }
-        }.collect())
+        }.collect()
       val mapDf = spark.createDataset(resolved.toSeq.flatMap(_._1)).toDF("__base", "__grp", "__path")
 
       // every group rendered with its own columns (positional `__c<i>`, so
@@ -1360,7 +1358,7 @@ object Restructure {
     val cap = math.max(0, cfg.maxReportedPaths)
     val headers = spark.sparkContext.broadcast(in.headers.toArray)
     val parts =
-      try Timer.time("write.convert")(prepared.mapPartitions { it =>
+      try prepared.mapPartitions { it =>
         val fileRows = scala.collection.mutable.HashMap.empty[String, Long]
         val rows = it.map { case (p, g, f, k, l) =>
           if (f.nonEmpty) fileRows.update(f, fileRows.getOrElse(f, 0L) + 1L)
@@ -1372,7 +1370,7 @@ object Restructure {
         val sample = scala.collection.mutable.ArrayBuffer.empty[String]
         out.foreach { p => n += 1L; if (sample.length < cap) sample += p }
         Iterator.single((n, sample.toSeq, fileRows.toMap))
-      }.collect())
+      }.collect()
       finally headers.destroy()
     Committed(
       WrittenBins(parts.iterator.map(_._1).sum,

@@ -494,7 +494,7 @@ object Similarity {
           .localCheckpoint(true)
     stars.unpersist()
     val idType = vertices.schema(vertices.columns.indexOf(idCol)).dataType
-    // measured at the threshold (Scratch ccbroadcast, Spark 4.1): a 1M-row
+    // measured at the threshold (Spark 4.1): a 1M-row
     // (long, long) mapping broadcasts as 39.6 MiB serialized and costs
     // ~71 MB resident driver heap for the HashedRelation build — 4× the
     // 10 MB autoBroadcastJoinThreshold default but well inside normal

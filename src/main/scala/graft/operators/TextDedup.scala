@@ -120,15 +120,10 @@ object TextDedup {
     * signature agg, one for the band-bucket self-join (bucket keyspace grows
     * with corpus size, so buckets stay small; AQE handles stragglers).
     *
-    * `materialize = true` (default) eagerly persists + computes the pairs
-    * and releases the intermediate band cache before returning — the
-    * long-running-service contract (no orphaned cached tables across
-    * batches; the returned frame stays cached and is the caller's to
-    * unpersist). `materialize = false` returns a fully LAZY plan with no
-    * persist and no blocking job — right for one-shot pipelines that
-    * consume the pairs exactly once (the band pipeline is still computed
-    * only once: both self-join sides shuffle on the same band key from an
-    * identical subtree, so the exchange is reused).
+    * Returns a fully LAZY plan with no persist and no blocking job: the
+    * band pipeline is still computed only once, because both self-join
+    * sides shuffle on the same band key from an identical subtree, so the
+    * exchange is reused.
     *
     * `carryCols`: NARROW per-document passthrough columns (provenance tags,
     * quality buckets) emitted on both pair sides as `__a_<c>` / `__b_<c>`.
@@ -141,10 +136,10 @@ object TextDedup {
   def minhashCandidatePairs(
       df: DataFrame, idCol: String, textCol: String,
       shingleN: Int = 3, k: Int = 12, bands: Int = 6, rowsPerBand: Int = 2,
-      materialize: Boolean = true, carryCols: Seq[String] = Nil): DataFrame =
+      carryCols: Seq[String] = Nil): DataFrame =
     minhashCandidatePairsFromSets(
       distinctShingleSets(df, idCol, textCol, shingleN, carryCols), idCol, k, bands,
-      rowsPerBand, materialize, carryCols)
+      rowsPerBand, carryCols)
 
   /** [[minhashCandidatePairs]] over a prebuilt (ideally persisted) shingle-set
     * frame, so pipelines that also need the sets (exact-Jaccard verification)
@@ -213,49 +208,26 @@ object TextDedup {
   private[graft] def minhashCandidatePairsFromSets(
       sets: DataFrame, idCol: String,
       k: Int = 12, bands: Int = 6, rowsPerBand: Int = 2,
-      materialize: Boolean = true, carryCols: Seq[String] = Nil): DataFrame = {
-    def pairsOf(a: DataFrame, b: DataFrame): DataFrame =
-      a.alias("a").join(b.alias("b"),
-          col("a.__band_idx") === col("b.__band_idx") &&
-          col("a.__band_hash") === col("b.__band_hash") &&
-          col("a.__id") < col("b.__id"))
-        .select(col("a.__id").as("doc_a") +: col("b.__id").as("doc_b") +:
-          (carryCols.map(c => col(s"a.$c").as(s"__a_$c")) ++
-           carryCols.map(c => col(s"b.$c").as(s"__b_$c"))): _*)
-        // carried columns are functionally dependent on the doc id, so the
-        // distinct's cardinality (and the pair semantics) are unchanged
-        .distinct()
-    if (materialize) {
-      // the self-join would otherwise recompute the whole shingle→minhash
-      // pipeline on both sides; the band table is tiny (bands·|docs| rows)
-      // — at cluster scale this is the classic LSH materialization point.
-      // Cache filled from the ROW-LOCAL band build (r19, guide §2.4 — the
-      // corpusClustersDirect recipe): identical rows, spec-pinned, but the
-      // fill runs straight off the scan with no signature explode →
-      // Sort+SortAggregate → Exchange ahead of a byte-identical cache.
-      // candidates materialize eagerly (persist + count — NOT
-      // localCheckpoint, which compiles the non-AQE plan and ran ~10×
-      // slower) so the band cache can be released: a long-running service
-      // calling this per batch must not accumulate orphaned cached tables.
-      val withBands = bandTableOfSetsLocal(sets, idCol, k, bands, rowsPerBand, carryCols)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      val candidates = pairsOf(withBands, withBands)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      candidates.count()
-      withBands.unpersist(false)
-      candidates
-    } else {
-      // lazy path: a SHUFFLE_HASH hint keeps both sides exchanging on the
-      // band key — the two exchange subtrees are identical, so AQE reuses
-      // the stage and the shingle→minhash pipeline runs once. (A broadcast
-      // join would instead recompute the pipeline for the build side.)
-      // ROW-LOCAL bands (byte-identical, spec-pinned): the only exchange
-      // left is the join's own band-key exchange, vs the agg form's extra
-      // Sort+SortAggregate+Exchange (string-lane min has no HashAggregate
-      // buffer) ahead of it.
-      val local = bandTableOfSetsLocal(sets, idCol, k, bands, rowsPerBand, carryCols)
-      pairsOf(local.hint("SHUFFLE_HASH"), local)
-    }
+      carryCols: Seq[String] = Nil): DataFrame = {
+    // a SHUFFLE_HASH hint keeps both sides exchanging on the band key —
+    // the two exchange subtrees are identical, so AQE reuses the stage and
+    // the shingle→minhash pipeline runs once. (A broadcast join would
+    // instead recompute the pipeline for the build side.) ROW-LOCAL bands
+    // (byte-identical, spec-pinned): the only exchange left is the join's
+    // own band-key exchange, vs the agg form's extra
+    // Sort+SortAggregate+Exchange (string-lane min has no HashAggregate
+    // buffer) ahead of it.
+    val local = bandTableOfSetsLocal(sets, idCol, k, bands, rowsPerBand, carryCols)
+    local.hint("SHUFFLE_HASH").alias("a").join(local.alias("b"),
+        col("a.__band_idx") === col("b.__band_idx") &&
+        col("a.__band_hash") === col("b.__band_hash") &&
+        col("a.__id") < col("b.__id"))
+      .select(col("a.__id").as("doc_a") +: col("b.__id").as("doc_b") +:
+        (carryCols.map(c => col(s"a.$c").as(s"__a_$c")) ++
+         carryCols.map(c => col(s"b.$c").as(s"__b_$c"))): _*)
+      // carried columns are functionally dependent on the doc id, so the
+      // distinct's cardinality (and the pair semantics) are unchanged
+      .distinct()
   }
 
   /** Incremental (cross-batch) near-dup candidates: documents of a NEW
@@ -302,12 +274,11 @@ object TextDedup {
     * their 64-bit simhash (guarantees recall for hamming distance ≤ 3 —
     * pigeonhole over 4 bands). Same bucket-join shape as MinHash LSH; the
     * verifier is then `GraftExpressions.hammingDist64` on the candidates.
-    * `materialize` follows [[minhashCandidatePairs]]: eager persist+release
-    * for service loops, a fully lazy reuse-the-band-exchange plan for
-    * one-shot consumers.
+    * Lazy like [[minhashCandidatePairs]]: identical subtrees on both
+    * shuffle-join sides let AQE reuse the band exchange, so the simhash
+    * pipeline computes once, with no barrier.
     */
-  def simhashCandidatePairs(df: DataFrame, idCol: String, textCol: String,
-      materialize: Boolean = true): DataFrame = {
+  def simhashCandidatePairs(df: DataFrame, idCol: String, textCol: String): DataFrame = {
     import graft.functions.{GraftExpressions, TextFunctions}
     GraftExpressions.register(df.sparkSession)
     val sh = GraftExpressions.simHash64(TextFunctions.words(col(textCol)))
@@ -315,25 +286,13 @@ object TextDedup {
       .select(col("__id"), col("__sh"), posexplode(array((0 until 4).map(i =>
         shiftrightunsigned(col("__sh"), i * 16).bitwiseAND(lit(0xFFFFL))): _*))
         .as(Seq("__band_idx", "__band_val")))
-    def pairsOf(a: DataFrame, b: DataFrame): DataFrame =
-      a.alias("a").join(b.alias("b"),
-          col("a.__band_idx") === col("b.__band_idx") &&
-          col("a.__band_val") === col("b.__band_val") &&
-          col("a.__id") < col("b.__id"))
-        .select(col("a.__id").as("doc_a"), col("b.__id").as("doc_b"),
-          GraftExpressions.hammingDist64(col("a.__sh"), col("b.__sh")).as("hamming"))
-        .distinct()
-    if (materialize) {
-      val bands = bandTable.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      val candidates = pairsOf(bands, bands)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      candidates.count()
-      bands.unpersist(false)
-      candidates
-    } else
-      // identical subtrees on both shuffle-join sides → AQE reuses the
-      // band exchange; the simhash pipeline computes once, no barrier
-      pairsOf(bandTable.hint("SHUFFLE_HASH"), bandTable)
+    bandTable.hint("SHUFFLE_HASH").alias("a").join(bandTable.alias("b"),
+        col("a.__band_idx") === col("b.__band_idx") &&
+        col("a.__band_val") === col("b.__band_val") &&
+        col("a.__id") < col("b.__id"))
+      .select(col("a.__id").as("doc_a"), col("b.__id").as("doc_b"),
+        GraftExpressions.hammingDist64(col("a.__sh"), col("b.__sh")).as("hamming"))
+      .distinct()
   }
 
   /** Repeated-passage detection (exact substring dedup at token-window

@@ -12,10 +12,11 @@ import graft.operators.TextDedup
   *
   *  1. near-deduped within itself ([[TextDedup.dedupCorpus]] — LSH →
   *     exact-Jaccard verify → connected components, at batch scale);
-  *  2. probed against the accumulated history with the broadcast-batch LSH
-  *     probe ([[TextDedup.minhashCandidatePairsAgainst]] — the history
-  *     side STREAMS through one scan, the batch band table broadcasts;
-  *     never history×history);
+  *  2. probed against the accumulated history with a fused broadcast-batch
+  *     LSH probe — the history side STREAMS through one row-local scan
+  *     that computes its bands and shingle sets
+  *     ([[TextDedup.bandTableOfSetsLocal]]), the batch bands and shingle
+  *     sets broadcast; never history×history;
   *  3. candidates exact-verified by shingle Jaccard (integer
   *     cross-multiply, no float compare), matching `dedupCorpus`
   *     semantics across the batch boundary;
@@ -56,22 +57,10 @@ object StreamingNearDedup {
       // skew protection — so AQE's only contribution per micro-batch is
       // one scheduled JOB PER EXCHANGE, and the per-job scheduling floor
       // is the measured per-batch bottleneck (round-15 decomposition:
-      // ~33 jobs × ~55 ms). Measured with the floor harness: 34.4 →
+      // ~33 jobs × ~55 ms). Measured (PLANS.md, round 15): 34.4 →
       // 13.4 jobs/batch and -36% full-corpus loop wall. Pass true to
       // re-enable (e.g. outsized non-contract batches on a skewed corpus).
-      adaptive: Boolean = false,
-      // FUSED history probe (default): the history side computes bands AND
-      // shingle sets row-locally in ONE codegen'd scan (no signature
-      // groupBy exchange, no second hSets scan) against two explicit
-      // batch-side broadcasts — dropping the round-17 inventory's `cands`
-      // broadcast job, which executed the whole history band scan inside a
-      // broadcast exchange. Candidates are identical by construction
-      // (bandTableOfSetsLocal ≡ bandTableOfSets, spec-pinned); a pair
-      // matching on multiple bands verifies per matching band instead of
-      // once, and the trailing distinct absorbs it. `false` keeps the
-      // split probe for A/B (the bench's floor decomposition measures
-      // both).
-      fusedProbe: Boolean = true): DataFrame = withAdaptive(batch.sparkSession, adaptive) {
+      adaptive: Boolean = false): DataFrame = withAdaptive(batch.sparkSession, adaptive) {
     def phase[T](name: String)(f: => T): T = {
       val t0 = System.nanoTime()
       val r = f
@@ -109,9 +98,8 @@ object StreamingNearDedup {
           dataSchema = Some(rows.schema)))
       val survivors = history match {
         case None => kept
-        case Some(h) if fusedProbe =>
-          // the same bounded-batch contract the split probe enforced
-          // inside minhashCandidatePairsAgainst
+        case Some(h) =>
+          // the bounded-batch contract of minhashCandidatePairsAgainst
           graft.operators.Similarity.requireProbeBatch(kept,
             graft.operators.Similarity.MaxProbeBatchRows, "probe batch",
             "for large batches run minhashCandidatePairs over the combined " +
@@ -126,7 +114,10 @@ object StreamingNearDedup {
           // history: ONE row-local scan carrying bands + shingle set —
           // stream-side width never shuffles; it is generated and consumed
           // within the same pipelined stage. No signature groupBy
-          // exchange, no second hSets scan, no `cands` broadcast job.
+          // exchange and no second shingle-set scan. Candidates equal the
+          // agg band pipeline's (bandTableOfSetsLocal ≡ bandTableOfSets,
+          // spec-pinned); a pair matching on several bands verifies once
+          // per matching band and the trailing distinct absorbs it.
           val hProbe = TextDedup.bandTableOfSetsLocal(
             TextDedup.distinctShingleSets(h, idCol, textCol, shingleN),
             idCol, k, bands, rowsPerBand, carryCols = Seq("__sh"))
@@ -139,22 +130,6 @@ object StreamingNearDedup {
             .join(broadcast(bSets), col("__pbid") === col("__bid"))
             .filter(inter * den >= union * num) // jaccard ≥ num/den, exact
             .select(col("__bid").as(idCol)).distinct()
-          kept.join(dupIds, Seq(idCol), "left_anti")
-        case Some(h) =>
-          val cands = TextDedup.minhashCandidatePairsAgainst(
-            h, kept, idCol, textCol, shingleN, k, bands, rowsPerBand)
-          // candidate ids are bounded by |batch| × matches — the small
-          // side; history shingle sets are computed only for candidates
-          val hSets = TextDedup.distinctShingleSets(h, idCol, textCol, shingleN)
-            .withColumnRenamed(idCol, "__hid").withColumnRenamed("__sh", "__hsh")
-          val bSets = TextDedup.distinctShingleSets(kept, idCol, textCol, shingleN)
-            .withColumnRenamed(idCol, "__bid").withColumnRenamed("__sh", "__bsh")
-          val (inter, union) = TextDedup.jaccardCounts(col("__hsh"), col("__bsh"))
-          val dupIds = hSets
-            .join(broadcast(cands), col("__hid") === col("history_id"))
-            .join(broadcast(bSets), col("batch_id") === col("__bid"))
-            .filter(inter * den >= union * num) // jaccard ≥ num/den, exact
-            .select(col("batch_id").as(idCol)).distinct()
           kept.join(dupIds, Seq(idCol), "left_anti")
       }
 

@@ -228,7 +228,7 @@ class PlanSpec extends SparkSpec {
   }
 
   // ---- lazy LSH compute-once asserts ---------------------------------
-  // The materialize=false paths rely on AQE reusing the band exchange of
+  // The lazy candidate-pair paths rely on AQE reusing the band exchange of
   // the bucket self-join (both sides shuffle an identical subtree). That
   // reuse is load-bearing — losing it silently doubles the heaviest stage
   // of the whole corpus-dedup family — and it is fragile (column-pruning
@@ -274,14 +274,14 @@ class PlanSpec extends SparkSpec {
 
   test("lazy minhash pairs: band exchange reused — shingle pipeline computes once") {
     val pairs = graft.operators.TextDedup.minhashCandidatePairs(
-      Tables.load(spark, sf, "documents"), "doc_id", "text", materialize = false)
+      Tables.load(spark, sf, "documents"), "doc_id", "text")
     // one Generate for the shingle explode + one for the band posexplode
     assertBandReuse(flattenExecuted(pairs), "__band_hash", maxGenerates = 2)
   }
 
   test("lazy simhash pairs: band exchange reused — simhash pipeline computes once") {
     val pairs = graft.operators.TextDedup.simhashCandidatePairs(
-      Tables.load(spark, sf, "documents"), "doc_id", "text", materialize = false)
+      Tables.load(spark, sf, "documents"), "doc_id", "text")
     // a single band posexplode — a second Generate means the simhash
     // pipeline ran for both join sides
     assertBandReuse(flattenExecuted(pairs), "__band_val", maxGenerates = 1)

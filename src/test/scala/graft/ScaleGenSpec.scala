@@ -4,8 +4,8 @@ import java.nio.file.Files
 
 import org.apache.spark.sql.functions._
 
-/** Unit coverage for the native scale-factor generator (the bench's
-  * sf1_native section and GenNative both build on it; the heavy-subset
+/** Unit coverage for the native scale-factor generator (`graft.ScaleGen`
+  * main and `tools/native_verify.sh` build on it; the heavy-subset
   * oracle run validates VALUES — this pins the structural invariants at a
   * tiny ratio so `sbt test` guards the generator itself).
   */

@@ -4,13 +4,32 @@ import java.nio.file.Files
 
 import graft.SparkSpec
 
+/** RawLocalFileSystem injecting a fixed per-open latency — an object-store
+  * stand-in for the bin readers' per-open GET round-trip. Static delay
+  * because local-mode executors share the driver JVM.
+  */
+class SlowOpenLocalFileSystem extends org.apache.hadoop.fs.RawLocalFileSystem {
+  override def getScheme: String = "slowopen"
+  override def getUri: java.net.URI = SlowOpenLocalFileSystem.FsUri
+  override def open(f: org.apache.hadoop.fs.Path, bufferSize: Int)
+      : org.apache.hadoop.fs.FSDataInputStream = {
+    val d = SlowOpenLocalFileSystem.delayMs
+    if (d > 0) Thread.sleep(d)
+    super.open(f, bufferSize)
+  }
+}
+
+object SlowOpenLocalFileSystem {
+  val FsUri: java.net.URI = java.net.URI.create("slowopen:///")
+  @volatile var delayMs: Long = 0L
+}
+
 /** The bin readers' bounded open-ahead (round-18: object-store per-open
   * latency) must be a pure performance change: identical rows to the
   * sequential path, correct behavior under injected per-open latency
-  * (through [[graft.SlowOpenLocalFileSystem]], the bench's stand-in), and
-  * no hang or stream leak when the consumer stops early (limit) or a file
-  * in the middle is unreadable. The latency WALL itself is measured by the
-  * bench's standing `bin_open_latency` A/B section, not asserted here.
+  * (through [[SlowOpenLocalFileSystem]]), and no hang or stream leak when
+  * the consumer stops early (limit) or a file in the middle is
+  * unreadable. The latency wall itself is not asserted here.
   */
 class OpenAheadSpec extends SparkSpec {
 
@@ -28,8 +47,8 @@ class OpenAheadSpec extends SparkSpec {
   test("open-ahead yields exactly the sequential path's rows, with injected per-open latency") {
     val (dir, rels) = mkBins(150)
     spark.sparkContext.hadoopConfiguration.set("fs.slowopen.impl",
-      classOf[graft.SlowOpenLocalFileSystem].getName)
-    graft.SlowOpenLocalFileSystem.delayMs = 2L
+      classOf[SlowOpenLocalFileSystem].getName)
+    SlowOpenLocalFileSystem.delayMs = 2L
     try {
       val seq = Restructure.readCsvBinFiles(spark, s"slowopen:$dir", "", rels,
         header, openAhead = 0).collect().map(_.toString).sorted.toSeq
@@ -38,7 +57,7 @@ class OpenAheadSpec extends SparkSpec {
         .collect().map(_.toString).sorted.toSeq
       assert(seq.size == 300)
       assert(ahd == seq)
-    } finally graft.SlowOpenLocalFileSystem.delayMs = 0L
+    } finally SlowOpenLocalFileSystem.delayMs = 0L
   }
 
   test("partial consumption (limit) completes without hanging on in-flight opens") {

@@ -198,10 +198,9 @@ class TextDedupSpec extends SparkSpec {
       (4L, "entirely unrelated words about cooking pasta with tomato sauce basil", "code"))
       .toDF("doc_id", "text", "source")
     val carried = TextDedup.minhashCandidatePairs(docs, "doc_id", "text",
-        materialize = false, carryCols = Seq("source"))
+        carryCols = Seq("source"))
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getString(2), r.getString(3))).toSet
-    val plain = TextDedup.minhashCandidatePairs(docs, "doc_id", "text",
-      materialize = false)
+    val plain = TextDedup.minhashCandidatePairs(docs, "doc_id", "text")
     val srcA = docs.select(col("doc_id").as("doc_a"), col("source").as("__a_source"))
     val srcB = docs.select(col("doc_id").as("doc_b"), col("source").as("__b_source"))
     val joined = plain.join(srcA, "doc_a").join(srcB, "doc_b")
@@ -214,7 +213,7 @@ class TextDedupSpec extends SparkSpec {
     // multiple carried columns of mixed types ride together
     val docs2 = docs.withColumn("bucket", (col("doc_id") % 2).cast("int"))
     val multi = TextDedup.minhashCandidatePairs(docs2, "doc_id", "text",
-      materialize = false, carryCols = Seq("source", "bucket"))
+      carryCols = Seq("source", "bucket"))
     assert(multi.columns.toSeq ==
       Seq("doc_a", "doc_b", "__a_source", "__a_bucket", "__b_source", "__b_bucket"))
     val row = multi.filter(col("doc_a") === 1L && col("doc_b") === 2L).head()
@@ -222,40 +221,35 @@ class TextDedupSpec extends SparkSpec {
       row.getString(4) == "books" && row.getInt(5) == 0)
   }
 
-  test("lazy candidate pairs: identical result to the materialized path, zero persisted RDDs") {
+  test("lazy candidate pairs: frozen pair set, zero persisted RDDs") {
     val docs = Seq(
       (1L, "spark catalyst optimizer rewrites logical plans into physical plans"),
       (2L, "spark catalyst optimizer rewrites logical plans into physical plans"),
       (3L, "spark catalyst optimizer rewrites logical plans into physical trees"),
       (4L, "entirely unrelated words about cooking pasta with tomato sauce basil"))
       .toDF("doc_id", "text")
-    val eager = TextDedup.minhashCandidatePairs(docs, "doc_id", "text")
-    val eagerPairs = eager.collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    eager.unpersist(false) // materialized path: the pairs cache is the caller's
     val before = spark.sparkContext.getPersistentRDDs.keySet
-    val lazyPairs = TextDedup.minhashCandidatePairs(docs, "doc_id", "text",
-        materialize = false)
+    val lazyPairs = TextDedup.minhashCandidatePairs(docs, "doc_id", "text")
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    assert(lazyPairs == eagerPairs)
+    assert(lazyPairs == Set((1L, 2L), (1L, 3L), (2L, 3L)), s"pairs $lazyPairs")
     // the lazy path must not persist anything
     assert(spark.sparkContext.getPersistentRDDs.keySet == before,
       "lazy minhashCandidatePairs persisted RDDs")
   }
 
-  test("lazy simhash pairs: identical result to the materialized path, zero persisted RDDs") {
+  test("lazy simhash pairs: frozen pair set, zero persisted RDDs") {
+    // doc 4 repeats doc 1 exactly (hamming 0); the one-word edit in doc 2
+    // moves its simhash out of every band shared with doc 1
     val docs = Seq(
       (1L, "spark catalyst optimizer rewrites logical plans into physical plans"),
       (2L, "spark catalyst optimizer rewrites logical plans into physical plan"),
-      (3L, "entirely unrelated words about cooking pasta with tomato sauce basil"))
+      (3L, "entirely unrelated words about cooking pasta with tomato sauce basil"),
+      (4L, "spark catalyst optimizer rewrites logical plans into physical plans"))
       .toDF("doc_id", "text")
-    val eager = TextDedup.simhashCandidatePairs(docs, "doc_id", "text")
-    val eagerPairs = eager.collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
-    eager.unpersist(false)
     val before = spark.sparkContext.getPersistentRDDs.keySet
-    val lazyPairs = TextDedup.simhashCandidatePairs(docs, "doc_id", "text", materialize = false)
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
-    assert(lazyPairs == eagerPairs)
+    val lazyPairs = TextDedup.simhashCandidatePairs(docs, "doc_id", "text")
+      .collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).toSet
+    assert(lazyPairs == Set((1L, 4L, 0)), s"pairs $lazyPairs")
     assert(spark.sparkContext.getPersistentRDDs.keySet == before,
       "lazy simhashCandidatePairs persisted RDDs")
   }

@@ -163,8 +163,8 @@ class StreamingSpec extends SparkSpec {
     assert(historyIds == Set(1L, 3L, 5L, 8L)) // 7 near-dups history 1
   }
 
-  test("fused probe ≡ split probe survivors; oversized batch fails fast on the fused guard") {
-    val work = Files.createTempDirectory("graft-fusedab")
+  test("history probe: frozen survivor set across two batches; oversized batch fails fast") {
+    val work = Files.createTempDirectory("graft-probe")
     val base = "the quick brown fox jumps over the lazy dog and runs far away into the woods tonight"
     val b0 = Seq(
       (1L, base), (2L, base + " ok"),
@@ -175,26 +175,21 @@ class StreamingSpec extends SparkSpec {
       (5L, "novel text with entirely fresh tokens nothing shared with previous documents at all"),
       (6L, "novel text with entirely fresh tokens nothing shared with previous documents at all really")
     ).toDF("doc_id", "text")
-    // the two probe forms must agree batch for batch — the fused path's
-    // candidates are identical by construction (bandTableOfSetsLocal ≡
-    // the agg band table) and the verify filter is shared
-    val survivors = Seq(true, false).map { fused =>
-      val dir = work.resolve(s"h-$fused").toString
-      Seq(b0, b1).zipWithIndex.map { case (b, i) =>
-        StreamingNearDedup.dedupBatch(b, i.toLong, dir, fusedProbe = fused)
-          .select("doc_id").collect().map(_.getLong(0)).toSet
-      }
+    // batch 0 collapses 1/2 in-batch; batch 1 loses 4 to history doc 1
+    // (probe) and 6 to 5 (in-batch)
+    val dir = work.resolve("h").toString
+    val survivors = Seq(b0, b1).zipWithIndex.map { case (b, i) =>
+      StreamingNearDedup.dedupBatch(b, i.toLong, dir)
+        .select("doc_id").collect().map(_.getLong(0)).toSet
     }
-    assert(survivors(0) == survivors(1),
-      s"fused ${survivors(0)} != split ${survivors(1)}")
-    assert(survivors(0) == Seq(Set(1L, 3L), Set(5L)))
-    // the fused path keeps the split path's bounded-batch contract: an
-    // over-cap batch fails fast naming the alternative, not mid-broadcast
+    assert(survivors == Seq(Set(1L, 3L), Set(5L)), s"survivors $survivors")
+    // bounded-batch contract: an over-cap batch fails fast naming the
+    // alternative, not mid-broadcast
     val big = spark.range(graft.operators.Similarity.MaxProbeBatchRows + 1L)
       .select(col("id").as("doc_id"),
         concat(lit("tok"), col("id")).as("text"))
     val e = intercept[IllegalArgumentException] {
-      StreamingNearDedup.dedupBatch(big, 2L, work.resolve("h-true").toString)
+      StreamingNearDedup.dedupBatch(big, 2L, dir)
     }
     assert(e.getMessage.contains("probe batch") &&
       e.getMessage.contains("minhashCandidatePairs"), e.getMessage)
