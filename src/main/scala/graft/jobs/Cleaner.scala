@@ -7,9 +7,7 @@ import org.apache.spark.sql.{SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
-import graft.paths.PathTemplate
 import graft.sources.{AvroRead, TopicFiles}
-import graft.time.TimeExtract
 
 /** The cleaner job (§3.2 / §2.6 of SURVEY.md): delete source Avro files whose
   * records are verifiably present in the output.
@@ -17,8 +15,11 @@ import graft.time.TimeExtract
   *  - C1 eligibility: file older than `ageMs` AND the ledger also covers
   *    `to+1` (a later offset was processed — the newest file is never
   *    deleted, cleaner/SourceDataCleaner.kt:106-113).
-  *  - C2 verification: re-derive every record's (bin path, time) and
-  *    anti-join against the distinct time values of the target bins
+  *  - C2 verification: re-derive every record's (bin path, time) by the
+  *    writer's own route ([[Restructure.route]]: template, plugins, bucket)
+  *    and anti-join against the distinct time values of the bin's whole
+  *    attempt family — `bin`, `bin_1`, … up to the first absent slot, as
+  *    the reference's attempt loop over header mismatches
   *    (timestamp-set containment, cleaner/TimestampExtractionCheck.kt) —
   *    one distributed join per topic instead of per-record file reads.
   *  - C3 rollback: a file that fails verification has its range removed
@@ -124,19 +125,10 @@ object Cleaner {
   private def verifyTopic(
       spark: SparkSession, cfg: RestructureJobConfig, topic: String,
       files: Seq[String]): Map[String, Long] = {
-    val tCfg = cfg.topicConfig(topic)
-    val df = AvroRead.read(spark, files)
-    val dataSchema = StructType(df.schema.fields.filterNot(f =>
-      f.name == AvroRead.FileCol || f.name == AvroRead.PosCol))
-    val timeCol = TimeExtract.timeColumn(dataSchema)
-    val template = tCfg.pathTemplate.getOrElse(cfg.pathTemplate)
-    val params = PathTemplate.fixedParams(dataSchema, timeCol, lit(topic),
-      cfg.extension, cfg.timeBinFormat)
-    val pathCol = PathTemplate.compile(template, params, Some(timeCol), Some(dataSchema))
-
+    val route = Restructure.route(cfg, topic, AvroRead.read(spark, files))
     // persisted: read twice (distinct target paths + the anti-join count)
-    val source = df.select(col(AvroRead.FileCol).as("__src"),
-      pathCol.as("__path"), timeCol.as("__time"))
+    val source = route.frame.select(col(AvroRead.FileCol).as("__src"),
+      route.path.as("__path"), route.time.as("__time"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
 
     import spark.implicits._
@@ -151,56 +143,42 @@ object Cleaner {
       "value.date" -> (c => to_date(c).cast(TimestampType).cast(DoubleType)),
       "value.timeReceived" -> (c => c.cast(DoubleType)),
       "value.timeCompleted" -> (c => c.cast(DoubleType)))
-    val leaves = graft.model.Flatten.leafPaths(dataSchema).map(_._1)
+    val leaves = graft.model.Flatten.leafPaths(route.dataSchema).map(_._1)
     val timeField = chain.flatMap { case (n, conv) =>
       leaves.find(_.equalsIgnoreCase(n)).map(_ -> conv)
     }.headOption
 
     val outFs = new HPath(cfg.outputRoot).getFileSystem(spark.sparkContext.hadoopConfiguration)
     // cleaner.cache = target-side metadata work (reference: TimestampFileCache
-    // loading, cleaner/TimestampFileCache.kt:39-68). The probe is
-    // DISTRIBUTED, mirroring Restructure.mergeCommitBins: existence +
-    // header reads run as one Spark job over the distinct bin paths, and
-    // its result is read in one pass or, past cfg.mergeChunkBins targets,
-    // consumed in chunks of cfg.mergeChunkBins — a
-    // verification sweep over 10^7 existing bins never holds the full
-    // path list on the driver. Missing-record counts are ADDITIVE across
-    // chunks because chunks partition the bin space and every record
-    // belongs to exactly one bin path.
-    val confEntries = graft.sources.AvroRead.fsConfEntries(spark)
+    // loading, cleaner/TimestampFileCache.kt:39-68): one distributed probe
+    // of each record bin's attempt family (the writer's probeBin over
+    // `bin`, `bin_1`, …), consumed by the merge's chunk loop. Missing-record
+    // counts are ADDITIVE across chunks because chunks partition the bin
+    // space and every record belongs to exactly one bin.
     val outputRoot = cfg.outputRoot
-    val needHeader = !cfg.zip && cfg.format != "json"
-    val probed = source.select(col("__path")).distinct().as[String].mapPartitions { it =>
-      if (it.isEmpty) Iterator.empty
-      else {
-        val conf = new org.apache.hadoop.conf.Configuration()
-        confEntries.foreach { case (k, v) => conf.set(k, v) }
-        val pfs = new HPath(outputRoot).getFileSystem(conf)
-        it.flatMap { p =>
-          val full = new HPath(s"$outputRoot/$p")
-          if (!pfs.exists(full)) None
-          else if (!needHeader) Some((p, ""))
-          else Restructure.readHeaderLine(pfs, full).map(h => (p, h))
-          // unreadable target: dropped — its records count as missing, so
-          // the source file is kept (same outcome as the old None branch)
-        }
-      }
+    val ext = cfg.extension
+    val wantHeader = !cfg.zip
+    val format = cfg.format
+    val probed = Restructure.probeBins(spark, outputRoot, source) { (pfs, p) =>
+      val family = Restructure.probeAttempts(pfs, outputRoot, ext, p, wantHeader, format)
+      if (family.isEmpty) None else Some((p, family))
     }
 
-    // One chunk's stored (__path, __time) frame: the scan construction
-    // (per-header single scans, input_file_name → bin path, zip unzip to
-    // one temp dir) is Restructure.existingBinFrames — ONE definition for
-    // both the merge and this verification. A zip bin that fails to
-    // stream is simply absent: its records count as missing, so the
-    // source file is kept. None = no readable target in this chunk.
+    // One chunk's stored (__path, __time) frame, `__path` being the base
+    // bin of each attempt file: the scan construction is
+    // Restructure.existingBinFrames, as in the merge. An unreadable
+    // target (probe state 2) or a zip bin that fails to stream is simply
+    // absent: its records count as missing, so the source file is kept.
     // `temps` receives the chunk's unzip directory; the caller deletes it
     // as soon as the chunk's count is drained (holding every chunk's
     // uncompressed bytes to the end would defeat the chunking).
-    def targetTimesFor(chunk: Seq[(String, String)],
+    def targetTimesFor(chunk: Seq[(String, Seq[(String, Int, String)])],
         temps: scala.collection.mutable.Buffer[HPath]): Option[org.apache.spark.sql.DataFrame] = {
       val (name, conv) = timeField.get
+      val baseOf = chunk.flatMap { case (base, family) => family.map(_._1 -> base) }.toMap
+      val readable = chunk.flatMap(_._2).collect { case (p, s, h) if s != 2 => (p, h) }
       val (frames, _) = Restructure.existingBinFrames(spark, outFs, cfg.outputRoot,
-        chunk, cfg.format, None, cfg.zip, temps)
+        readable, cfg.format, None, cfg.zip, temps, baseOf)
       if (frames.isEmpty) None
       else Some(frames.map { case (_, stored) =>
         val c =
@@ -211,59 +189,25 @@ object Cleaner {
     }
 
     val withTime = source.filter(col("__time").isNotNull)
-    def countMissing(missing: org.apache.spark.sql.DataFrame,
-        into: scala.collection.mutable.Map[String, Long]): Unit = {
+    val counts = scala.collection.mutable.Map.empty[String, Long]
+    def countMissing(missing: org.apache.spark.sql.DataFrame): Unit = {
       // chunked fetch of the per-source-file verdicts (tiny agg rows)
       val it = missing.groupBy(col("__src")).count().toLocalIterator()
       while (it.hasNext) {
         val r = it.next()
         val k = r.getString(0)
-        into.update(k, into.getOrElse(k, 0L) + r.getLong(1))
+        counts.update(k, counts.getOrElse(k, 0L) + r.getLong(1))
       }
     }
-
-    val counts = scala.collection.mutable.Map.empty[String, Long]
-    def countAgainst(rows: org.apache.spark.sql.DataFrame, chunk: Seq[(String, String)]): Unit = {
-      // per-chunk temp cleanup: the chunk's count is fully drained before
-      // the delete, and holding every chunk's uncompressed zip bytes to the
-      // end would peak at the whole store's size
-      val temps = scala.collection.mutable.ArrayBuffer.empty[HPath]
-      try targetTimesFor(chunk, temps) match {
-        case Some(t) => countMissing(rows.join(t, Seq("__path", "__time"), "left_anti"), counts)
-        case None => countMissing(rows, counts)
-      } finally temps.foreach(t => outFs.delete(t, true))
-    }
     try {
-      val chunkSize = math.max(1, cfg.mergeChunkBins)
-      // one pass, as in Restructure.mergeCommitBins: at most chunkSize+1
-      // probe rows tell the no-target, single-chunk and chunked cases apart
-      lazy val head =
-        probed.limit(math.min(chunkSize.toLong + 1, Int.MaxValue).toInt).collect().toSeq
-      if (timeField.isEmpty || head.isEmpty) countMissing(withTime, counts)
-      else if (head.size <= chunkSize) countAgainst(withTime, head)
-      else {
-        // chunk-consumption loop mirrors Restructure.mergeCommitBins
-        // (same repartition→toLocalIterator→grouped discipline; only the
-        // probe arity and the per-chunk action differ) — change both in
-        // lockstep; the scanned-row→path mapping itself is shared
-        // (existingBinFrames)
-        import scala.jdk.CollectionConverters._
-        val probedDf = probed.toDF("__p", "__header")
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        try {
-          val nExisting = probedDf.count()
-          val nParts = math.max(1, math.ceil(nExisting.toDouble / chunkSize).toInt)
-          val chunks = probedDf.repartition(nParts, col("__p"))
-            .as[(String, String)].toLocalIterator().asScala.grouped(chunkSize)
-          for (chunk <- chunks) {
-            val chunkPaths = spark.createDataset(chunk.map(_._1)).toDF("__path")
-            countAgainst(withTime.join(broadcast(chunkPaths), Seq("__path"), "left_semi"),
-              chunk.toSeq)
-          }
-          // records whose bin has no existing target at all: all missing
-          countMissing(withTime.join(
-            probedDf.select(col("__p").as("__path")), Seq("__path"), "left_anti"), counts)
-        } finally probedDf.unpersist(false)
+      if (timeField.isEmpty) countMissing(withTime)
+      else Restructure.inBinChunks(spark, withTime, probed, None, cfg.mergeChunkBins) {
+        (rows, chunk) =>
+          val temps = scala.collection.mutable.ArrayBuffer.empty[HPath]
+          try targetTimesFor(chunk, temps) match {
+            case Some(t) => countMissing(rows.join(t, Seq("__path", "__time"), "left_anti"))
+            case None => countMissing(rows)
+          } finally temps.foreach(t => outFs.delete(t, true))
       }
     } finally source.unpersist(false)
     files.map(f => new HPath(f).getName).map(n => n -> counts.getOrElse(n, 0L)).toMap

@@ -260,36 +260,12 @@ object Restructure {
       topic: String, files: Seq[String], ledger: OffsetRangeSet,
       avroSchema: org.apache.avro.Schema, df: DataFrame,
       skip: Map[String, Seq[(Long, Long)]]): TopicResult = {
-    val tCfg = cfg.topicConfig(topic)
-    val dataSchema = dataSchemaOf(df)
-
-    val timeCol = TimeExtract.timeColumn(dataSchema)
-    val template = tCfg.pathTemplate.getOrElse(cfg.pathTemplate)
-    val params = PathTemplate.fixedParams(dataSchema, timeCol, lit(topic),
-      cfg.extension, cfg.timeBinFormat)
-    // G6: plugin enrichment (broadcast-joined dimension columns) happens
-    // once per batch, before path compilation; the output projection selects
-    // by dataSchema, so enrichment columns never reach the written files
-    val dfE = cfg.pathPlugins.foldLeft(df)((d, p) => p.enrich(d))
-    val basePath = PathTemplate.compile(template, params, Some(timeCol), Some(dataSchema),
-      cfg.pathPlugins)
-    // G8 bucket routing: a second template prefixes the output path
-    val pathCol = cfg.bucketTemplate.fold(basePath)(bt =>
-      concat(bucketWithFallback(cfg,
-          PathTemplate.compile(bt, params, Some(timeCol), Some(dataSchema), cfg.pathPlugins)),
-        lit("/"), basePath))
-
+    val routed = route(cfg, topic, df)
     // K4 schema sidecar rides the write tasks (BinWriter first-touch per
     // output directory, create-if-absent), along with the stale dot-temp
     // sweep — no driver-side pass over a collected bin-directory list
-    val sidecarBytes = Some(avroSchema.toString(true).getBytes("UTF-8"))
-    val written =
-      if (cfg.format == "json")
-        jsonBins(spark, cfg, fs, topic, dfE, dataSchema, pathCol, sidecarBytes)
-      else if (hasDynamicLeaves(dataSchema))
-        writeCsvBinsDynamic(spark, cfg, fs, topic, dfE, dataSchema, timeCol, template, tCfg,
-          sidecarBytes)
-      else csvBins(spark, cfg, fs, topic, dfE, dataSchema, pathCol, sidecarBytes)
+    val written = writeBins(spark, cfg, fs, topic, routed.frame, routed.dataSchema, routed.path,
+      Some(avroSchema.toString(true).getBytes("UTF-8")))
 
     // ledger commit: closed ranges are sized by their offset span; an
     // open-ended file (no end offset in the name) is sized by the rows the
@@ -327,6 +303,48 @@ object Restructure {
     TopicResult(topic, files, records, written.bins)
   }
 
+  /** Where a topic's records go. `frame` is the decoded frame plus the
+    * path plugins' enrichment columns, `dataSchema` its record columns,
+    * `time` the record time in epoch seconds (null when absent) and `path`
+    * the bin path under the output root.
+    */
+  private[jobs] final case class Route(frame: DataFrame, dataSchema: StructType,
+      time: Column, path: Column)
+
+  /** The one bin-path derivation, shared by the writer and the cleaner:
+    * the topic's template (else the job's) over the fixed parameters and
+    * the plugins, prefixed by the G8 bucket template when one is set. The
+    * plugin enrichment (broadcast-joined dimension columns) happens once
+    * per batch; the writers project by `dataSchema`, so enrichment columns
+    * never reach the written files.
+    */
+  private[jobs] def route(cfg: RestructureJobConfig, topic: String, decoded: DataFrame): Route = {
+    val dataSchema = dataSchemaOf(decoded)
+    val time = TimeExtract.timeColumn(dataSchema)
+    val params = PathTemplate.fixedParams(dataSchema, time, lit(topic),
+      cfg.extension, cfg.timeBinFormat)
+    def compile(template: String): Column =
+      PathTemplate.compile(template, params, Some(time), Some(dataSchema), cfg.pathPlugins)
+    val base = compile(cfg.topicConfig(topic).pathTemplate.getOrElse(cfg.pathTemplate))
+    val path = cfg.bucketTemplate.fold(base)(bt =>
+      concat(bucketWithFallback(cfg, compile(bt)), lit("/"), base))
+    Route(cfg.pathPlugins.foldLeft(decoded)((d, p) => p.enrich(d)), dataSchema, time, path)
+  }
+
+  /** The one writer dispatch: JSON bins, dynamic-shape CSV bins (map keys
+    * and array indices as columns, shapes split into attempt files) or
+    * static CSV bins. `df` carries the data columns, FileCol and PosCol;
+    * `path` is each row's bin path.
+    */
+  private[graft] def writeBins(
+      spark: SparkSession, cfg: RestructureJobConfig, fs: FileSystem, topic: String,
+      df: DataFrame, dataSchema: StructType, path: Column,
+      sidecar: Option[Array[Byte]]): Committed =
+    if (cfg.format == "json") jsonBins(spark, cfg, fs, topic, df, dataSchema, path, sidecar)
+    else if (hasDynamicLeaves(dataSchema))
+      dynamicCsvBins(spark, cfg, fs, topic, df, dataSchema, path, sidecar)
+    else csvBins(spark, cfg, fs, topic, df, dataSchema, path, sidecar)
+
   /** Flattened CSV output projection: dot-named leaves in schema order,
     * binary → unpadded base64, NullType → string, excludeFields dropped,
     * everything cast to its CSV string form (so merge-with-existing unions
@@ -345,12 +363,6 @@ object Restructure {
         rendered.as(n)
       }
 
-  private[graft] def writeCsvBins(
-      spark: SparkSession, cfg: RestructureJobConfig, fs: FileSystem, topic: String,
-      df: DataFrame, dataSchema: StructType, pathCol: Column, tCfg: TopicJobConfig,
-      sidecar: Option[Array[Byte]] = None): WrittenBins =
-    csvBins(spark, cfg, fs, topic, df, dataSchema, pathCol, sidecar).bins
-
   private def csvBins(
       spark: SparkSession, cfg: RestructureJobConfig, fs: FileSystem, topic: String,
       df: DataFrame, dataSchema: StructType, pathCol: Column,
@@ -367,11 +379,11 @@ object Restructure {
     * bins carry no source file and are not counted). Open-ended source
     * files are sized by it in the ledger.
     */
-  private[jobs] final case class Committed(bins: WrittenBins, fileRows: Map[String, Long]) {
+  private[graft] final case class Committed(bins: WrittenBins, fileRows: Map[String, Long]) {
     def merge(o: Committed, cap: Int): Committed =
       Committed(bins.merge(o.bins, cap), addCounts(fileRows, o.fileRows))
   }
-  private[jobs] object Committed { val empty: Committed = Committed(WrittenBins.empty, Map.empty) }
+  private[graft] object Committed { val empty: Committed = Committed(WrittenBins.empty, Map.empty) }
 
   private def addCounts(a: Map[String, Long], b: IterableOnce[(String, Long)]): Map[String, Long] =
     b.iterator.foldLeft(a) { case (m, (k, n)) => m.updated(k, m.getOrElse(k, 0L) + n) }
@@ -452,21 +464,18 @@ object Restructure {
     * Merge PLANNING is distributed AND its consumption CHUNKED: existence +
     * readability + header probing runs as one Spark job over the distinct
     * bin paths (one FS metadata call per bin rides the executors, not a
-    * driver thread pool), and one pass fetches at most
-    * `cfg.mergeChunkBins + 1` probe rows — enough to tell the three cases
-    * apart without a separate count. No row: a cold commit. At most
-    * `mergeChunkBins`: the common append, one commit over every existing
-    * bin. More: a giant re-run, whose probe result is persisted and
-    * consumed in chunks of `mergeChunkBins` paths — each chunk's
-    * header-group readers are planned and COMMITTED before the next chunk
-    * is fetched, so a re-run touching 10^7 pre-existing bins never holds
-    * more than one chunk of path strings (plus one probe shuffle
-    * partition) on the driver. Per-chunk commits are safe because chunks
-    * PARTITION the bin space: every bin's rows (existing + new) land
-    * wholly in exactly one commit, the writer's dedup is per bin, and the
-    * ledger marks source files only after the whole topic batch succeeds —
-    * a crash mid-chunks re-runs the batch idempotently under the
-    * reference's append contract (existing rows participate in dedup).
+    * driver thread pool), consumed by [[inBinChunks]] in chunks of
+    * `cfg.mergeChunkBins` paths — each chunk's header-group readers are
+    * planned and COMMITTED before the next chunk is fetched, so a re-run
+    * touching 10^7 pre-existing bins never holds more than one chunk of
+    * path strings (plus one probe shuffle partition) on the driver; a
+    * chunk without existing bins is a cold commit. Per-chunk commits are
+    * safe because chunks PARTITION the bin space: every bin's rows
+    * (existing + new) land wholly in exactly one commit, the writer's
+    * dedup is per bin, and the ledger marks source files only after the
+    * whole topic batch succeeds — a crash mid-chunks re-runs the batch
+    * idempotently under the reference's append contract (existing rows
+    * participate in dedup).
     *
     * `jsonSchema` is Some(nested schema) for JSON bins (read typed, no
     * inference); None for CSV bins (read as strings by each file's header).
@@ -490,59 +499,77 @@ object Restructure {
       topic: String, sidecar: Option[Array[Byte]], layout: BinLayout,
       probedBins: Option[Seq[(String, Int, String)]] = None): Committed = {
     import spark.implicits._
-    val confEntries = AvroRead.fsConfEntries(spark)
     val outputRoot = cfg.outputRoot
     val wantHeader = !cfg.zip
     val fmt = format
-    val probed = prepared.select(col("__path")).distinct().as[String].mapPartitions { it =>
-      if (it.isEmpty) Iterator.empty
-      else {
-        val conf = new org.apache.hadoop.conf.Configuration()
-        confEntries.foreach { case (k, v) => conf.set(k, v) }
-        val pfs = new HPath(outputRoot).getFileSystem(conf)
-        it.flatMap(p => probeBin(pfs, outputRoot, p, wantHeader, fmt))
-      }
-    }
-    val chunkSize = math.max(1, cfg.mergeChunkBins)
-    def commitChunk(rows: DataFrame, chunk: Seq[(String, Int, String)]): Committed = {
+    val probed = probeBins(spark, outputRoot, prepared)(probeBin(_, outputRoot, _, wantHeader, fmt))
+    var written = Committed.empty
+    inBinChunks(spark, prepared, probed, probedBins, cfg.mergeChunkBins) { (rows, chunk) =>
       val temps = scala.collection.mutable.ArrayBuffer.empty[HPath]
-      try commitBins(spark, cfg, layout.render(
-          mergeChunk(spark, cfg, fs, rows, chunk, fmt, jsonSchema, temps, layout.attach)),
-        format, topic, sidecar)
-      finally temps.foreach(t => fs.delete(t, true))
+      val committed =
+        try commitBins(spark, cfg, layout.render(
+            mergeChunk(spark, cfg, fs, rows, chunk, fmt, jsonSchema, temps, layout.attach)),
+          format, topic, sidecar)
+        finally temps.foreach(t => fs.delete(t, true))
+      written = written.merge(committed, cfg.maxReportedPaths)
     }
-    val head = probedBins.getOrElse(
+    written
+  }
+
+  /** `probe` of each distinct `__path` of `rows`, run executor-side on the
+    * output filesystem: the one probe job of the merge and of the cleaner.
+    */
+  private[jobs] def probeBins[T: org.apache.spark.sql.Encoder](spark: SparkSession,
+      outputRoot: String, rows: DataFrame)(
+      probe: (FileSystem, String) => Option[T]): org.apache.spark.sql.Dataset[T] = {
+    val confEntries = AvroRead.fsConfEntries(spark)
+    rows.select(col("__path")).distinct().as[String](org.apache.spark.sql.Encoders.STRING)
+      .mapPartitions { it =>
+        if (it.isEmpty) Iterator.empty
+        else {
+          val conf = new org.apache.hadoop.conf.Configuration()
+          confEntries.foreach { case (k, v) => conf.set(k, v) }
+          val pfs = new HPath(outputRoot).getFileSystem(conf)
+          it.flatMap(p => probe(pfs, p))
+        }
+      }
+  }
+
+  /** The one chunk-consumption loop over a bin probe (the merge's and the
+    * cleaner's). `probed` holds one row per existing bin, its first field
+    * that bin's `__path` in `rows`; `known` is the same rows when the
+    * caller already holds them. `f` gets `rows` in pieces that PARTITION
+    * the bin space, each with the probe rows of its bins.
+    *
+    * One pass fetches at most `chunkBins + 1` probe rows — enough to tell
+    * the cases apart without a separate count: up to `chunkBins` (none
+    * included), one call with every row. More: a giant re-run, whose probe
+    * result is persisted and fetched `chunkBins` rows at a time (cached
+    * partitions sized ~chunkBins, so toLocalIterator holds one); each
+    * chunk's call re-scans `rows` for its bins' rows — N chunks trade N
+    * scans for O(chunk) driver heap — and a last call takes the rows of
+    * bins with no probe row.
+    */
+  private[jobs] def inBinChunks[T: org.apache.spark.sql.Encoder](spark: SparkSession,
+      rows: DataFrame, probed: org.apache.spark.sql.Dataset[T], known: Option[Seq[T]],
+      chunkBins: Int)(f: (DataFrame, Seq[T]) => Unit): Unit = {
+    val chunkSize = math.max(1, chunkBins)
+    val head = known.getOrElse(
       probed.limit(math.min(chunkSize.toLong + 1, Int.MaxValue).toInt).collect().toSeq)
-    if (head.isEmpty) commitBins(spark, cfg, layout.render(prepared), format, topic, sidecar)
-    else if (head.size <= chunkSize) commitChunk(prepared, head)
+    if (head.size <= chunkSize) f(rows, head)
     else {
-      // giant re-run: fetch ≤chunkSize probe rows at a time (cached
-      // partitions sized ~chunkSize, so toLocalIterator holds one);
-      // each chunk re-scans the persisted batch for its bins' rows —
-      // N-chunk re-runs trade N cached scans for O(chunk) driver heap.
-      // Cleaner.verifyTopic mirrors this loop — change both in lockstep.
       import scala.jdk.CollectionConverters._
-      val probedDf = probedBins.fold(probed.toDF())(spark.createDataset(_).toDF())
-        .toDF("__p", "__state", "__header")
+      val probedDf = known.fold(probed)(spark.createDataset(_))
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       try {
-        val nExisting = probedDf.count()
-        val nParts = math.max(1, math.ceil(nExisting.toDouble / chunkSize).toInt)
-        var written = Committed.empty
-        val chunks = probedDf.repartition(nParts, col("__p"))
-          .as[(String, Int, String)].toLocalIterator().asScala.grouped(chunkSize)
+        val bin = col(probedDf.columns.head)
+        val nParts = math.max(1, math.ceil(probedDf.count().toDouble / chunkSize).toInt)
+        val chunks = probedDf.repartition(nParts, bin).toLocalIterator().asScala.grouped(chunkSize)
         for (chunk <- chunks) {
-          val chunkPaths = spark.createDataset(chunk.map(_._1)).toDF("__path")
-          written = written.merge(commitChunk(
-            prepared.join(broadcast(chunkPaths), Seq("__path"), "left_semi"), chunk.toSeq),
-            cfg.maxReportedPaths)
+          val inChunk = spark.createDataset(chunk.toSeq).select(bin.as("__path"))
+          f(rows.join(broadcast(inChunk), Seq("__path"), "left_semi"), chunk.toSeq)
         }
-        // bins with no existing target: one final new-only commit
-        val newOnly = prepared.join(
-          probedDf.select(col("__p").as("__path")), Seq("__path"), "left_anti")
-        written.merge(
-          commitBins(spark, cfg, layout.render(newOnly), format, topic, sidecar),
-          cfg.maxReportedPaths)
+        f(rows.join(probedDf.select(bin.as("__path")), Seq("__path"), "left_anti"), Nil)
       } finally probedDf.unpersist(false)
     }
   }
@@ -626,10 +653,10 @@ object Restructure {
 
   /** Readers over a chunk's EXISTING bins — the ONE place the scanned-row
     * → bin-path mapping is defined (shared by [[mergeChunk]] and
-    * [[Cleaner.verifyTopic]], which previously each built it): one
-    * DataFrame per distinct CSV header (one overall for JSON, header ""),
-    * each paired with its header line and carrying the known relative bin
-    * path as its `__path` column. Zip
+    * [[Cleaner.verifyTopic]]): one DataFrame per distinct CSV header (one
+    * overall for JSON, header ""), each paired with its header line and
+    * carrying `binOf` of the known relative bin path as its `__path`
+    * column (the cleaner maps each attempt file to its base bin). Zip
     * bins stream into one dot-prefixed temp directory first (appended to
     * `temps` for recursive post-use cleanup), with each bin's real header
     * read off the unzipped file. Returns (frames, failed): `failed` = zip
@@ -642,10 +669,11 @@ object Restructure {
       spark: SparkSession, fs: FileSystem, outputRoot: String,
       headered: Seq[(String, String)], format: String,
       jsonSchema: Option[StructType], zip: Boolean,
-      temps: scala.collection.mutable.Buffer[HPath])
+      temps: scala.collection.mutable.Buffer[HPath],
+      binOf: String => String = identity)
       : (Seq[(String, DataFrame)], Seq[String]) = {
     val (scanRoot, suffix, avail, failed) =
-      if (!zip) (outputRoot, "", headered, Nil)
+      if (!zip || headered.isEmpty) (outputRoot, "", headered, Nil)
       else {
         val tempRoot = s"$outputRoot/.graft-unzip-${java.util.UUID.randomUUID()}"
         temps += new HPath(tempRoot)
@@ -664,15 +692,13 @@ object Restructure {
         // `__path` directly, which also retires the input_file_name
         // percent-decode UDF this branch used to need (bin paths carrying
         // URI-escapable characters never pass through an encoded URI now).
-        // jsonSchema is always Some on this path (writeJsonBins passes the
-        // typed data schema); the inference fallback survives only for a
-        // hypothetical schemaless caller.
+        // jsonSchema is Some on the merge path (jsonBins passes the typed
+        // data schema); the cleaner passes None and pays one inference
+        // pass, then the same bespoke read.
         Seq(avail.map(_._1)).filter(_.nonEmpty).map { members =>
           val sch = jsonSchema.getOrElse(
-            // schemaless caller (none exists today): one inference pass,
-            // then the same bespoke read
             spark.read.json(members.map(p => s"$scanRoot/$p$suffix"): _*).schema)
-          "" -> readJsonBinFiles(spark, scanRoot, suffix, members, sch)
+          "" -> readJsonBinFiles(spark, scanRoot, suffix, members, sch, binOf = binOf)
         }
       } else {
         // CSV bins go through [[readCsvBinFiles]] — a distributed
@@ -681,9 +707,9 @@ object Restructure {
         // 20k-tiny-bin append is >20 s of pure overhead per merge chunk
         // against ~0.1 s of raw IO (PLANS.md round-17 attribution); the
         // reference-scale 50k-bin store would spend the append in reader
-        // setup. __path is the known relative path directly.
+        // setup. __path is `binOf` of the known relative path.
         avail.groupBy(_._2).toSeq.map { case (h, members) =>
-          h -> readCsvBinFiles(spark, scanRoot, suffix, members.map(_._1), h)
+          h -> readCsvBinFiles(spark, scanRoot, suffix, members.map(_._1), h, binOf = binOf)
         }
       }
     (frames, failed)
@@ -766,7 +792,7 @@ object Restructure {
     */
   private[graft] def readCsvBinFiles(spark: SparkSession, scanRoot: String,
       suffix: String, members: Seq[String], headerLine: String,
-      openAhead: Int = BinOpenAheadDefault): DataFrame = {
+      openAhead: Int = BinOpenAheadDefault, binOf: String => String = identity): DataFrame = {
     import org.apache.spark.sql.types.{StringType, StructField}
     def settings(): com.univocity.parsers.csv.CsvParserSettings = {
       val s = new com.univocity.parsers.csv.CsvParserSettings
@@ -816,6 +842,7 @@ object Restructure {
       val pfs = new HPath(rootLocal).getFileSystem(conf)
       val parser = new com.univocity.parsers.csv.CsvParser(settings())
       openBinsAhead(pfs, rootLocal, sfx, it.toArray, aheadLocal).flatMap { case (p, raw) =>
+        val bin = binOf(p)
         // a corrupt/truncated gzip header throws from the decompressor
         // CONSTRUCTOR — close the raw FS stream on that path too (the
         // finally below only covers streams that reached the reader)
@@ -838,7 +865,7 @@ object Restructure {
             vals(i) = if (v == null || v.isEmpty) null else v
             i += 1
           }
-          vals(n) = p
+          vals(n) = bin
           org.apache.spark.sql.Row.fromSeq(
             scala.collection.immutable.ArraySeq.unsafeWrapArray(vals))
         }
@@ -866,7 +893,7 @@ object Restructure {
     */
   private[jobs] def readJsonBinFiles(spark: SparkSession, scanRoot: String,
       suffix: String, members: Seq[String], schema: StructType,
-      openAhead: Int = BinOpenAheadDefault): DataFrame = {
+      openAhead: Int = BinOpenAheadDefault, binOf: String => String = identity): DataFrame = {
     import org.apache.spark.sql.types.{StringType, StructField}
     val confEntries = AvroRead.fsConfEntries(spark)
     val slices = math.max(1,
@@ -879,6 +906,7 @@ object Restructure {
       confEntries.foreach { case (k, v) => conf.set(k, v) }
       val pfs = new HPath(rootLocal).getFileSystem(conf)
       openBinsAhead(pfs, rootLocal, sfx, it.toArray, aheadLocal).flatMap { case (p, raw) =>
+        val bin = binOf(p)
         val in: java.io.InputStream =
           if (p.endsWith(".gz"))
             try new java.util.zip.GZIPInputStream(raw)
@@ -892,7 +920,7 @@ object Restructure {
         try {
           var l = reader.readLine()
           while (l != null) {
-            if (!l.forall(Character.isWhitespace)) lines += org.apache.spark.sql.Row(l, p)
+            if (!l.forall(Character.isWhitespace)) lines += org.apache.spark.sql.Row(l, bin)
             l = reader.readLine()
           }
         } finally reader.close()
@@ -968,10 +996,10 @@ object Restructure {
     * one merge plan and one commit, so the job count does not grow with
     * the number of shapes.
     */
-  private[graft] def writeCsvBinsDynamic(
+  private def dynamicCsvBins(
       spark: SparkSession, cfg: RestructureJobConfig, fs: FileSystem, topic: String,
-      df: DataFrame, dataSchema: StructType, timeCol: Column, template: String,
-      tCfg: TopicJobConfig, sidecar: Option[Array[Byte]] = None): Committed = {
+      df: DataFrame, dataSchema: StructType, basePathCol: Column,
+      sidecar: Option[Array[Byte]]): Committed = {
     import graft.model.DynamicShape
     import spark.implicits._
     // persisted once: group discovery and the commit both read this frame,
@@ -982,15 +1010,6 @@ object Restructure {
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
 
     try {
-      val params = PathTemplate.fixedParams(dataSchema, timeCol, lit(topic),
-        cfg.extension, cfg.timeBinFormat)
-      val plainPathCol = PathTemplate.compile(template, params, Some(timeCol), Some(dataSchema),
-        cfg.pathPlugins)
-      // G8 bucket routing applies to dynamic topics exactly as to static ones
-      val basePathCol = cfg.bucketTemplate.fold(plainPathCol)(bt =>
-        concat(bucketWithFallback(cfg,
-            PathTemplate.compile(bt, params, Some(timeCol), Some(dataSchema), cfg.pathPlugins)),
-          lit("/"), plainPathCol))
       // one pass: per fingerprint, its first appearance (attempt order —
       // reference: arrival order), the group's concrete shape (uniform
       // within the group by construction — any row's value serves) and the
@@ -1043,7 +1062,7 @@ object Restructure {
         val shapes = DynamicShape.parseRoot(row.getString(row.fieldIndex("__gshape")), dataSchema)
         row.getString(row.fieldIndex("__fp")) -> DynamicShape.expandRoot(dataSchema, shapes, exclude)
       }
-      val names = groupCols.map(_._2.map(dataColName))
+      val names = groupCols.map(_._2.map(_._1))
       // the stored header is written by the bin writer, which quotes
       // fields containing delimiter/quote/newline (map keys can hold any of
       // these) — the attempt-slot comparison uses the same quoting
@@ -1096,7 +1115,7 @@ object Restructure {
         val cols = outCols.indices.map(i => s"__c$i")
         val (key, line) = keyAndLine(cfg, topic, "csv", names(g), cols.map(col))
         withFp.filter(col("__fp") === fp)
-          .select(outCols.zip(cols).map { case (c, n) => c.as(n) } ++ Seq(
+          .select(outCols.zip(cols).map { case ((_, c), n) => c.as(n) } ++ Seq(
             basePathCol.as("__base"), col(AvroRead.FileCol), col(AvroRead.PosCol)): _*)
           .select(col("__base"), lit(g).as("__grp"), col(AvroRead.FileCol),
             col(AvroRead.PosCol), key.as("__key"), line.as("__line"))
@@ -1132,13 +1151,6 @@ object Restructure {
       when(bucket.rlike(pattern), lit(cfg.bucketDefaultName)).otherwise(bucket)
     }
 
-  private def dataColName(c: Column): String = {
-    // alias name of a projection column built with .as(name)
-    val s = c.toString
-    val i = s.lastIndexOf(" AS ")
-    (if (i >= 0) s.substring(i + 4) else s).stripPrefix("`").stripSuffix("`")
-  }
-
   /** Attempt slots (`bin.csv`, `bin_1.csv`, `bin_2.csv`, …) for the shape
     * groups writing to `basePath`, given in group order by their header
     * lines: each group takes the first slot that is free or holds its
@@ -1151,15 +1163,10 @@ object Restructure {
   private[jobs] def resolveAttemptSlots(
       fs: FileSystem, outputRoot: String, extension: String,
       basePath: String, headers: Seq[String]): Seq[String] = {
-    def withAttempt(i: Int): String =
-      if (i == 0) basePath
-      else if (basePath.endsWith(extension))
-        basePath.dropRight(extension.length) + s"_$i" + extension
-      else basePath + s"_$i"
     // slot → header of what occupies it (None: unreadable)
     val occupied = scala.collection.mutable.Map.empty[Int, Option[String]]
     def occupant(i: Int): Option[Option[String]] = occupied.get(i).orElse {
-      val full = new HPath(s"$outputRoot/${withAttempt(i)}")
+      val full = new HPath(s"$outputRoot/${attemptPath(basePath, extension, i)}")
       if (!fs.exists(full)) None
       else {
         val h = readHeaderLine(fs, full)
@@ -1169,11 +1176,31 @@ object Restructure {
     }
     headers.map { h =>
       var i = 0
-      while (i < 1000 && occupant(i).exists(!_.contains(h))) i += 1
+      while (i < MaxAttempts && occupant(i).exists(!_.contains(h))) i += 1
       occupied(i) = Some(h)
-      withAttempt(i)
+      attemptPath(basePath, extension, i)
     }
   }
+
+  private val MaxAttempts = 1000
+
+  /** The one attempt-file naming: slot 0 is the bin itself, slot i inserts
+    * `_i` before the extension (`bin.csv`, `bin_1.csv`, …).
+    */
+  private[jobs] def attemptPath(basePath: String, extension: String, i: Int): String =
+    if (i == 0) basePath
+    else if (basePath.endsWith(extension))
+      basePath.dropRight(extension.length) + s"_$i" + extension
+    else basePath + s"_$i"
+
+  /** [[probeBin]] over a base bin's attempt family: `bin`, `bin_1`, … up
+    * to the first absent slot. Runs executor-side.
+    */
+  private[jobs] def probeAttempts(fs: FileSystem, outputRoot: String, extension: String,
+      basePath: String, wantHeader: Boolean, format: String): Seq[(String, Int, String)] =
+    Iterator.range(0, MaxAttempts)
+      .map(i => probeBin(fs, outputRoot, attemptPath(basePath, extension, i), wantHeader, format))
+      .takeWhile(_.isDefined).flatten.toSeq
 
   /** First header RECORD of a (possibly gzip/zip) CSV bin, or None if
     * unreadable. Two traps a naive first-line read falls into, both real
@@ -1233,12 +1260,6 @@ object Restructure {
     if (!fs.rename(target, candidate))
       throw new java.io.IOException(s"failed to quarantine corrupt target $target -> $candidate")
   }
-
-  private[graft] def writeJsonBins(
-      spark: SparkSession, cfg: RestructureJobConfig, fs: FileSystem, topic: String,
-      df: DataFrame, dataSchema: StructType, pathCol: Column, tCfg: TopicJobConfig,
-      sidecar: Option[Array[Byte]] = None): WrittenBins =
-    jsonBins(spark, cfg, fs, topic, df, dataSchema, pathCol, sidecar).bins
 
   private def jsonBins(
       spark: SparkSession, cfg: RestructureJobConfig, fs: FileSystem, topic: String,

@@ -203,13 +203,13 @@ object DynamicShape {
   }
 
   /** Expanded output columns for a value `c` of type `dt` whose concrete
-    * shape is `shape` — dotted names rooted at `name`, reference flatten
-    * semantics (schema order, sorted map keys, binary → unpadded base64,
-    * everything cast to its CSV string form). `exclude` filters both whole
-    * subtrees and individual expanded names.
+    * shape is `shape`, as (name, column) pairs — dotted names rooted at
+    * `name`, reference flatten semantics (schema order, sorted map keys,
+    * binary → unpadded base64, everything cast to its CSV string form).
+    * `exclude` filters both whole subtrees and individual expanded names.
     */
   def expand(c: Column, name: String, dt: DataType, shape: Shape,
-      exclude: String => Boolean): Seq[Column] =
+      exclude: String => Boolean): Seq[(String, Column)] =
     (dt, shape) match {
       // exclusion applies to flattened LEAF names, dynamic-collection node
       // names and their entry/index names — NOT bare struct prefixes,
@@ -241,16 +241,16 @@ object DynamicShape {
       case (_: ArrayType, Static) | (_: MapType, Static) => Nil
       case (BinaryType, _) =>
         if (exclude(name)) Nil
-        else Seq(regexp_replace(base64(c), "=+$", "").as(name))
+        else Seq(name -> regexp_replace(base64(c), "=+$", ""))
       case (NullType, _) =>
-        if (exclude(name)) Nil else Seq(lit(null).cast(StringType).as(name))
+        if (exclude(name)) Nil else Seq(name -> lit(null).cast(StringType))
       case _ =>
-        if (exclude(name)) Nil else Seq(c.cast(StringType).as(name))
+        if (exclude(name)) Nil else Seq(name -> c.cast(StringType))
     }
 
   /** Root-level expansion over a record frame. */
   def expandRoot(schema: StructType, shapes: Map[String, Shape],
-      exclude: String => Boolean): Seq[Column] =
+      exclude: String => Boolean): Seq[(String, Column)] =
     schema.fields.toSeq.flatMap { f =>
       expand(col(Flatten.quote(f.name)), f.name, f.dataType,
         shapes.getOrElse(f.name, Static), exclude)

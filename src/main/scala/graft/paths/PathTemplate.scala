@@ -191,9 +191,11 @@ object PathTemplate {
       "userId"    -> keyField("userId", "unknown-user"),
       "sourceId"  -> keyField("sourceId", "unknown-source"),
       "topic"     -> topic,
-      // attempt 0 renders as "" (reference toAttemptSuffix); static-schema
-      // topics never write attempt>0, the dynamic path overrides this slot
-      // executor-side (Restructure.resolveAttemptSlots)
+      // always attempt 0, rendered "" (reference toAttemptSuffix): the
+      // compiled path names a bin's slot 0. Later slots (a dynamic topic's
+      // header mismatches) are named from that path by
+      // Restructure.attemptPath — `_i` before the extension — for the
+      // writer and the cleaner alike, never through this parameter
       "attempt"   -> lit(""),
       "extension" -> lit(extension),
       "filename"  -> concat(TimeExtract.timeBin(timeEpochSec, timeBinFormat), lit(extension)))

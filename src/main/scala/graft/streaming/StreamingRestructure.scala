@@ -6,7 +6,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import org.apache.spark.sql.types.StructType
 
-import graft.jobs.{Restructure, RestructureJobConfig, TopicJobConfig}
+import graft.jobs.{Restructure, RestructureJobConfig}
 import graft.sources.AvroRead
 
 /** Structured-Streaming form of the restructure pipeline (§2.9 of
@@ -94,9 +94,10 @@ object StreamingRestructure {
   }
 
   /** One micro-batch: stamp provenance (batch id ↔ source file, row pos),
-    * then reuse the batch bin writer (merge-with-existing, dedup, one file
-    * per bin, sidecar-free). A batchId at or below the committed marker is
-    * a foreachBatch replay of work already on disk — skipped.
+    * then write through the batch path's writer dispatch (JSON, dynamic
+    * shape or static CSV; merge-with-existing, dedup, one file per bin,
+    * sidecar-free). A batchId at or below the committed marker is a
+    * foreachBatch replay of work already on disk — skipped.
     */
   private[graft] def processBatch(
       spark: SparkSession, cfg: RestructureJobConfig, topic: String,
@@ -110,13 +111,8 @@ object StreamingRestructure {
     val stamped = batch
       .withColumn(AvroRead.FileCol, lit(f"batch-$batchId%012d"))
       .withColumn(AvroRead.PosCol, monotonically_increasing_id())
-    val written =
-      if (cfg.format == "json")
-        Restructure.writeJsonBins(spark, cfg, fs, topic, stamped, dataSchema, pathCol,
-          cfg.topicConfig(topic))
-      else
-        Restructure.writeCsvBins(spark, cfg, fs, topic, stamped, dataSchema, pathCol,
-          cfg.topicConfig(topic))
+    val written = Restructure.writeBins(spark, cfg, fs, topic, stamped, dataSchema, pathCol,
+      sidecar = None).bins
     checkpoint.foreach(writeMarker(spark, _, batchId))
     written
   }

@@ -2,7 +2,6 @@ package graft.jobs
 
 import java.io.File
 import java.nio.file.{Files, Path}
-import java.util.concurrent.atomic.AtomicInteger
 import scala.jdk.CollectionConverters._
 
 import org.apache.avro.Schema
@@ -52,19 +51,6 @@ class AppendJobCountSpec extends SparkSpec {
     w.close()
   }
 
-  private def countJobs(body: => Unit): Int = {
-    val jobs = new AtomicInteger()
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        jobs.incrementAndGet()
-    }
-    org.apache.spark.ListenerBusDrain(spark.sparkContext)
-    spark.sparkContext.addSparkListener(listener)
-    try { body; org.apache.spark.ListenerBusDrain(spark.sparkContext) }
-    finally spark.sparkContext.removeSparkListener(listener)
-    jobs.get()
-  }
-
   /** Every one of `shapes` distinct map-key sets in each of 2 users × 3 hours. */
   private def dynBatch(shapes: Int, offset: Int): Seq[GenericRecord] =
     for (u <- 0 until 2; h <- 0 until 3; s <- 0 until shapes)
@@ -72,7 +58,7 @@ class AppendJobCountSpec extends SparkSpec {
 
   private def runCounted(cfg: RestructureJobConfig): (Int, Restructure.RunResult) = {
     var r: Restructure.RunResult = null
-    val n = countJobs { r = Restructure.run(spark, cfg) }
+    val n = SparkJobs.count(spark) { r = Restructure.run(spark, cfg) }
     assert(r.failedTopics.isEmpty, r.failedTopics.toString)
     (n, r)
   }

@@ -45,10 +45,7 @@ class PathCharsSpec extends SparkSpec {
             monotonically_increasing_id().as(AvroRead.PosCol))
       }
       def write(tag: String) =
-        if (json) Restructure.writeJsonBins(spark, cfg, fs, "t",
-          frame(tag), dataSchema, col("__p"), TopicJobConfig())
-        else Restructure.writeCsvBins(spark, cfg, fs, "t",
-          frame(tag), dataSchema, col("__p"), TopicJobConfig())
+        Restructure.writeBins(spark, cfg, fs, "t", frame(tag), dataSchema, col("__p"), None).bins
       val cold = write("c")
       assert(cold.count == 4, s"(json=$json,$gz,$zip) cold: $cold")
       val append = write("d")

@@ -79,12 +79,11 @@ class DynamicShapeFuzzSpec extends SparkSpec {
       val cols = DynamicShape.expandRoot(schema, shapes, _ => false)
       val expected = schema.fields.toSeq.zipWithIndex.flatMap { case (f, i) =>
         reference(row.get(i), f.name, f.dataType) }
-      val gotNames = cols.map(c => {
-        val s = c.toString; val i = s.lastIndexOf(" AS "); s.substring(i + 4) })
+      val gotNames = cols.map(_._1)
       val expNames = expected.map(_._1)
       val gotVals =
         if (cols.isEmpty) Seq.empty[String]
-        else df.select(cols: _*).collect()(0).toSeq.map(v => if (v == null) null else v.toString)
+        else df.select(cols.map(_._2): _*).collect()(0).toSeq.map(v => if (v == null) null else v.toString)
       val ok = gotNames == expNames && gotVals == expected.map(_._2)
       if (!ok)
         Console.err.println(s"[shapefuzz] row=$row shape='$shape'\n names $gotNames vs $expNames" +
@@ -152,7 +151,7 @@ class DynamicShapeFuzzSpec extends SparkSpec {
         try {
           val shapes = DynamicShape.parseRoot(both.getString(0), sch)
           val cols = DynamicShape.expandRoot(sch, shapes, _ => false)
-          if (cols.nonEmpty) df.select(cols: _*).collect()
+          if (cols.nonEmpty) df.select(cols.map(_._2): _*).collect()
           true
         } catch { case e: Exception =>
           Console.err.println(s"[schemafuzz] parse/expand failed for $sch $row: $e"); false
