@@ -3,7 +3,7 @@ package graft.jobs
 import java.time.Instant
 
 import org.apache.hadoop.fs.{Path => HPath}
-import org.apache.spark.sql.{SparkSession}
+import org.apache.spark.sql.{Encoders, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -190,15 +190,17 @@ object Cleaner {
 
     val withTime = source.filter(col("__time").isNotNull)
     val counts = scala.collection.mutable.Map.empty[String, Long]
-    def countMissing(missing: org.apache.spark.sql.DataFrame): Unit = {
-      // chunked fetch of the per-source-file verdicts (tiny agg rows)
-      val it = missing.groupBy(col("__src")).count().toLocalIterator()
-      while (it.hasNext) {
-        val r = it.next()
-        val k = r.getString(0)
-        counts.update(k, counts.getOrElse(k, 0L) + r.getLong(1))
-      }
-    }
+    def countMissing(missing: org.apache.spark.sql.DataFrame): Unit =
+      // the per-source-file verdicts, summed within each partition and
+      // fetched in one action (at most one row per partition and file).
+      // A groupBy would end the plan in an exchange, and AQE skips the
+      // result job of an empty exchange, so the job count would follow
+      // the verdicts
+      missing.select(col("__src")).as(Encoders.STRING)
+        .mapPartitions(_.foldLeft(Map.empty[String, Long])((m, k) =>
+          m.updated(k, m.getOrElse(k, 0L) + 1L)).iterator)(
+          Encoders.tuple(Encoders.STRING, Encoders.scalaLong))
+        .collect().foreach { case (k, n) => counts.update(k, counts.getOrElse(k, 0L) + n) }
     try {
       if (timeField.isEmpty) countMissing(withTime)
       else Restructure.inBinChunks(spark, withTime, probed, None, cfg.mergeChunkBins) {

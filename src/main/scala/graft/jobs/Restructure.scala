@@ -336,7 +336,7 @@ object Restructure {
     * static CSV bins. `df` carries the data columns, FileCol and PosCol;
     * `path` is each row's bin path.
     */
-  private[graft] def writeBins(
+  private[jobs] def writeBins(
       spark: SparkSession, cfg: RestructureJobConfig, fs: FileSystem, topic: String,
       df: DataFrame, dataSchema: StructType, path: Column,
       sidecar: Option[Array[Byte]]): Committed =
@@ -379,11 +379,11 @@ object Restructure {
     * bins carry no source file and are not counted). Open-ended source
     * files are sized by it in the ledger.
     */
-  private[graft] final case class Committed(bins: WrittenBins, fileRows: Map[String, Long]) {
+  private[jobs] final case class Committed(bins: WrittenBins, fileRows: Map[String, Long]) {
     def merge(o: Committed, cap: Int): Committed =
       Committed(bins.merge(o.bins, cap), addCounts(fileRows, o.fileRows))
   }
-  private[graft] object Committed { val empty: Committed = Committed(WrittenBins.empty, Map.empty) }
+  private[jobs] object Committed { val empty: Committed = Committed(WrittenBins.empty, Map.empty) }
 
   private def addCounts(a: Map[String, Long], b: IterableOnce[(String, Long)]): Map[String, Long] =
     b.iterator.foldLeft(a) { case (m, (k, n)) => m.updated(k, m.getOrElse(k, 0L) + n) }

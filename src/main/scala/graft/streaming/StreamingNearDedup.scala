@@ -40,7 +40,8 @@ object StreamingNearDedup {
     * (epoch, batchId) overwrite their own partition, while a NEW streaming
     * query (fresh checkpoint → batch ids restart at 0) must use a
     * different epoch so it cannot clobber an earlier query's partitions —
-    * [[run]] derives it from the checkpoint location.
+    * [[run]] derives it from the checkpoint location. The step's plans
+    * run with AQE off ([[withAqeOff]]).
     */
   def dedupBatch(batch: DataFrame, batchId: Long, historyDir: String,
       idCol: String = "doc_id", textCol: String = "text",
@@ -50,17 +51,7 @@ object StreamingNearDedup {
       // per-phase wall-time sink (phase name, seconds) for floor
       // attribution — a plain callback so the bench decomposes the SHIPPED
       // step instead of a re-implementation; no-op (and no cost) by default
-      phaseSink: (String, Double) => Unit = (_, _) => (),
-      // AQE OFF by default for the step's plans: every broadcast in the
-      // probe is EXPLICIT, the batch side is bounded by contract, and the
-      // hot-bucket collapse guard (not runtime skew-join) is the in-batch
-      // skew protection — so AQE's only contribution per micro-batch is
-      // one scheduled JOB PER EXCHANGE, and the per-job scheduling floor
-      // is the measured per-batch bottleneck (round-15 decomposition:
-      // ~33 jobs × ~55 ms). Measured (PLANS.md, round 15): 34.4 →
-      // 13.4 jobs/batch and -36% full-corpus loop wall. Pass true to
-      // re-enable (e.g. outsized non-contract batches on a skewed corpus).
-      adaptive: Boolean = false): DataFrame = withAdaptive(batch.sparkSession, adaptive) {
+      phaseSink: (String, Double) => Unit = (_, _) => ()): DataFrame = withAqeOff(batch.sparkSession) {
     def phase[T](name: String)(f: => T): T = {
       val t0 = System.nanoTime()
       val r = f
@@ -171,10 +162,7 @@ object StreamingNearDedup {
   def dedupEmbeddingBatch(batch: DataFrame, batchId: Long, historyDir: String,
       threshold: Double = 0.95, idCol: String = "vec_id",
       vecCol: String = "embedding", epoch: String = "b",
-      compactEvery: Int = 16, ttlBatches: Long = 0L,
-      // see dedupBatch: the step's plans are broadcast-explicit and
-      // bounded, so AQE only adds a scheduled job per exchange here
-      adaptive: Boolean = false): DataFrame = withAdaptive(batch.sparkSession, adaptive) {
+      compactEvery: Int = 16, ttlBatches: Long = 0L): DataFrame = withAqeOff(batch.sparkSession) {
     import graft.operators.Similarity
     val partitionKey = s"$epoch-$batchId"
     val spark = batch.sparkSession
@@ -305,104 +293,50 @@ object StreamingNearDedup {
       .start()
   }
 
-  /** Per-session reference count for the AQE override: `depth` concurrent
-    * steps requesting the SAME value share one set/restore pair; a step
-    * requesting the OPPOSITE value waits until the holders drain. Weak keys
-    * so the map never pins a SparkSession.
+  /** Per-session count of the steps inside [[withAqeOff]]: the first
+    * entrant saves the session's AQE value, the last one out restores it.
+    * Weak keys, so the map never pins a SparkSession.
     */
-  private final class AqGuard {
+  private final class AqeOff {
     var depth = 0
-    var value: String = _
-    var prev: String = _
-    // threads blocked wanting a DIFFERENT value than the current holders':
-    // while any are queued, new same-value entrants must also wait (no
-    // barging); at drain the opposed value is recorded as next-admitted
-    // (`handoff`), so same-value waiters re-block until an opposed-value
-    // step has entered — the handoff is DETERMINISTIC, not a notifyAll
-    // race the opposed waiter could lose to every same-value waiter under
-    // continuously overlapping steps
-    var opposedWaiters = 0
-    // the value opposed waiters want (binary conf: all concurrently-opposed
-    // waiters necessarily agree)
-    var opposedWant: String = _
-    // set at drain while opposed waiters are queued: only a step wanting
-    // THIS value may become the next holder. Cleared by that step on entry,
-    // or by the last opposed waiter leaving the queue (interrupt path —
-    // the same monitor hold that decrements the count to zero, so threads
-    // blocked solely on the stale handoff are always released)
-    var handoff: String = null
+    var saved: String = _
   }
-  private val aqGuards: java.util.Map[SparkSession, AqGuard] =
+  private val aqeOff: java.util.Map[SparkSession, AqeOff] =
     java.util.Collections.synchronizedMap(
-      new java.util.WeakHashMap[SparkSession, AqGuard]())
+      new java.util.WeakHashMap[SparkSession, AqeOff]())
 
-  /** Toggle AQE around a synchronous step, restoring the previous value.
+  /** Run a synchronous step with AQE off, then restore the session's value.
+    * Every broadcast in the probe is EXPLICIT, the batch side is bounded by
+    * contract, and the hot-bucket collapse guard (not runtime skew-join) is
+    * the in-batch skew protection — so AQE's only contribution per
+    * micro-batch is one scheduled JOB PER EXCHANGE, and the per-job
+    * scheduling floor is the measured per-batch bottleneck (round-15
+    * decomposition: ~33 jobs × ~55 ms; with AQE off 34.4 → 13.4
+    * jobs/batch and -36% full-corpus loop wall, PLANS.md).
+    *
     * The step's returned frames are MATERIALIZED inside (localCheckpoint +
     * parquet commit), so nothing escapes that would execute under the
     * restored conf. Session-scoped by nature: an unrelated interactive
     * query on the same session during a step sees the override. Concurrent
-    * STEPS on one session (e.g. a text `run` and an embedding
-    * `runEmbedding` stream sharing a session — each stream's own
-    * foreachBatch is serial, but two streams are not) are safe: same-value
-    * steps share one reference-counted set/restore (no mid-step restore
-    * from a sibling's finally), and an opposite-value step blocks until
-    * the current holders finish rather than flipping the conf under them —
-    * with no barging AND a deterministic handoff: while an opposite-value
-    * step is queued, new same-value entrants wait too, and when the
-    * holders drain the opposed value is recorded as next-admitted, so the
-    * opposed step cannot lose the monitor-reacquisition race to queued
-    * same-value waiters either — continuously-overlapping same-value
-    * steps are held until an opposed step has entered.
+    * steps on one session (a text `run` and an embedding `runEmbedding`
+    * stream sharing a session — each stream's own foreachBatch is serial,
+    * but two streams are not) share one reference-counted set/restore, so
+    * a step never sees a sibling's restore mid-run.
     */
-  private[streaming] def withAdaptive[T](spark: SparkSession, enabled: Boolean)(f: => T): T = {
+  private[streaming] def withAqeOff[T](spark: SparkSession)(f: => T): T = {
     val key = "spark.sql.adaptive.enabled"
-    val want = enabled.toString
-    val g = aqGuards.computeIfAbsent(spark, _ => new AqGuard)
+    val g = aqeOff.computeIfAbsent(spark, _ => new AqeOff)
     g.synchronized {
-      // re-evaluate opposition each round: the holder value can flip while
-      // queued (the monitor is held between decrement and re-registration,
-      // so the count never flickers visibly to other threads)
-      while ((g.depth > 0 && (g.value != want || g.opposedWaiters > 0)) ||
-             (g.depth == 0 && g.handoff != null && g.handoff != want)) {
-        val opposedNow = g.depth > 0 && g.value != want
-        if (opposedNow) { g.opposedWaiters += 1; g.opposedWant = want }
-        try g.wait()
-        finally if (opposedNow) {
-          g.opposedWaiters -= 1
-          // last opposed waiter leaving the queue: on the normal wake it
-          // proceeds to take the slot under THIS same monitor hold (the
-          // loop re-check and entry run before the monitor is released),
-          // so clearing the handoff here is safe — and on the interrupt
-          // path it is REQUIRED, releasing entrants blocked solely on the
-          // no-barge count or a handoff nobody will ever claim
-          if (g.opposedWaiters == 0) {
-            g.handoff = null
-            g.notifyAll()
-          }
-        }
-      }
       if (g.depth == 0) {
-        // claiming a handoff addressed to this value admits this thread as
-        // the opposed step the drain promised the slot to (or an equivalent
-        // same-value entrant — indistinguishable to the conf)
-        if (g.handoff == want) g.handoff = null
-        g.prev = spark.conf.get(key, "true")
-        g.value = want
-        if (!g.prev.equalsIgnoreCase(want)) spark.conf.set(key, want)
+        g.saved = spark.conf.get(key, "true")
+        spark.conf.set(key, "false")
       }
       g.depth += 1
     }
     try f
     finally g.synchronized {
       g.depth -= 1
-      if (g.depth == 0) {
-        if (!g.prev.equalsIgnoreCase(g.value)) spark.conf.set(key, g.prev)
-        // deterministic no-barge handoff: with opposed waiters queued, only
-        // a step wanting their value may enter next — queued same-value
-        // waiters that win the notifyAll race re-block on the handoff
-        if (g.opposedWaiters > 0) g.handoff = g.opposedWant
-        g.notifyAll()
-      }
+      if (g.depth == 0) spark.conf.set(key, g.saved)
     }
   }
 

@@ -148,17 +148,35 @@ class CleanerRouteSpec extends SparkSpec {
     assert(Files.readAllLines(bin).get(0) == "key.userId,value.time,value.props.x AS y")
   }
 
-  private def cleanerJobs(schema: Schema, topic: String, records: Seq[Map[String, Any]]): Int = {
+  /** Spark jobs of one cleaner run over a landed and restructured topic;
+    * `tamper` edits the output before the cleaner runs.
+    */
+  private def cleanerJobs(schema: Schema, topic: String, records: Seq[Map[String, Any]],
+      tamper: Path => Unit = _ => ()): (Int, Cleaner.CleanResult) = {
     val (work, _) = land(schema, topic, records)
     val cfg = cfgAt(work.resolve("in"), work.resolve("out"))
     Restructure.run(spark, cfg)
-    SparkJobs.count(spark)(Cleaner.run(spark, cfg, ageMs = 0L))
+    tamper(work.resolve("out"))
+    var cleaned: Cleaner.CleanResult = null
+    val jobs = SparkJobs.count(spark) { cleaned = Cleaner.run(spark, cfg, ageMs = 0L) }
+    (jobs, cleaned)
   }
 
   test("cleaner job count per topic: the route and the attempt-family probe add no job") {
     // a static bin and a dynamic bin's two-file attempt family verify in
     // the same number of jobs
-    assert(cleanerJobs(staticSchema, "st_topic", staticRecords) == 7)
-    assert(cleanerJobs(dynSchema, "dyn_topic", dynRecords) == 7)
+    assert(cleanerJobs(staticSchema, "st_topic", staticRecords)._1 == 7)
+    assert(cleanerJobs(dynSchema, "dyn_topic", dynRecords)._1 == 7)
+  }
+
+  test("cleaner job count does not depend on the verdicts") {
+    val (verified, ok) = cleanerJobs(staticSchema, "st_topic", staticRecords)
+    assert(ok.deleted.size == 1 && ok.rolledBack.isEmpty, ok.toString)
+    // the same topic with one user's bin gone: its records are missing, so
+    // the closed file fails verification
+    val (failing, bad) = cleanerJobs(staticSchema, "st_topic", staticRecords,
+      out => Files.delete(out.resolve("p1/u1/st_topic/20210102_1000.csv")))
+    assert(bad.deleted.isEmpty && bad.rolledBack.size == 1, bad.toString)
+    assert(verified == failing, s"all verified: $verified jobs, one file failing: $failing")
   }
 }
